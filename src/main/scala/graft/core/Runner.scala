@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.Path
 
@@ -34,8 +36,10 @@ object Runner {
     * done-queue tables, bert/deploy/utils.py:542-595).
     *
     * `replayFrom`: skip every stage before this name and seed from its
-    * checkpoint (reference `-r -s <stage>`). Fails fast if the checkpoint
-    * is missing.
+    * checkpoint (reference `-r -s <stage>`). Fails fast unless that
+    * checkpoint was committed: an overwrite that failed part-way leaves a
+    * directory without the writer's `_SUCCESS` marker, and replaying from
+    * it would read an empty or partial stage.
     */
   def runCheckpointed(
       spark: SparkSession,
@@ -53,7 +57,7 @@ object Runner {
       else {
         val prev = names(startIdx - 1)
         val path = s"$checkpointDir/$prev"
-        require(exists(spark, path), s"replay checkpoint missing: $path")
+        require(exists(spark, s"$path/_SUCCESS"), s"replay checkpoint missing: $path")
         spark.read.parquet(path)
       }
     val runId = java.util.UUID.randomUUID().toString
@@ -82,13 +86,15 @@ object Runner {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** Retries non-fatal failures only: an interrupt, OOM or linkage error
+    * propagates at once, unwrapped. */
   private def withRetries[T](retries: Int, stage: String)(body: => T): T = {
     var attempt = 0
     var last: Throwable = null
     while (attempt <= retries) {
       try return body
       catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           last = e
           attempt += 1
       }

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.types.{DataType, IntegerType}
@@ -56,15 +55,4 @@ case class HammingDistance(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object HammingDistance {
-  private[functions] val info = new ExpressionInfo(
-    classOf[HammingDistance].getName, null, "hamming_distance",
-    "_FUNC_(a, b) - byte-wise hamming distance of two strings (codegen'd).", "")
-
-  private[functions] def build(children: Seq[Expression]): Expression = {
-    require(children.size == 2, "hamming_distance takes exactly 2 arguments")
-    HammingDistance(children(0), children(1))
-  }
 }

@@ -3,7 +3,7 @@ package graft.functions
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -156,16 +156,6 @@ case class SrpFingerprint(left: Expression, right: Expression)
 }
 
 object SrpFingerprint {
-  private[functions] val info = new ExpressionInfo(
-    classOf[SrpFingerprint].getName, null, "srp_fingerprint",
-    "_FUNC_(emb, planes) - sign-random-projection bit fingerprint " +
-      "(exact DECIMAL(28,14) accumulation, fused).", "")
-
-  private[functions] def build(children: Seq[Expression]): Expression = {
-    require(children.size == 2, "srp_fingerprint takes exactly 2 arguments")
-    SrpFingerprint(children(0), children(1))
-  }
-
   /** Column form with the plane matrix shipped as a true literal — the SQL
     * registry path only works when the planes argument is itself a foldable
     * array literal; a column reference (e.g. from typedLit + withColumn)

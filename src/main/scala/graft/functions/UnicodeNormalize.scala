@@ -3,7 +3,7 @@ package graft.functions
 import java.text.Normalizer
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.types.{DataType, NullType, StringType}
@@ -108,16 +108,4 @@ case class UnicodeNormalize(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object UnicodeNormalize {
-  val info = new ExpressionInfo(
-    classOf[UnicodeNormalize].getName, null, "unicode_normalize",
-    "_FUNC_(s, form) - Unicode-normalize s under literal form " +
-      "'NFC'|'NFD'|'NFKC'|'NFKD' (codegen'd JDK Normalizer).", "")
-
-  def build(children: Seq[Expression]): Expression = {
-    require(children.size == 2, "unicode_normalize takes exactly 2 arguments")
-    UnicodeNormalize(children(0), children(1))
-  }
 }

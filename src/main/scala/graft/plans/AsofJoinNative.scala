@@ -12,33 +12,32 @@ import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Native as-of join — the category-(c) extension point end-to-end: a
-  * custom `LogicalPlan` node, a `SparkStrategy` that plans it, and a
-  * physical `BinaryExecNode` that executes it, registered through
-  * `SparkSessionExtensions` (and `spark.experimental.extraStrategies` for
-  * live sessions).
+/** As-of join — the operator Spark has no native primitive for — as a
+  * category-(c) extension point end-to-end: a custom `LogicalPlan` node, a
+  * `SparkStrategy` that plans it, and a physical `BinaryExecNode` that
+  * executes it, registered through `SparkSessionExtensions` (and
+  * `spark.experimental.extraStrategies` for live sessions).
   *
-  * [[graft.ops.AsofJoin]] is the composition path (union + one shuffle +
-  * windowed carry); it is correct and scale-safe, but it pays for
-  * generality: the union doubles the rows entering the shuffle, every left
-  * column rides through the sort as a null-padded union column, and the
-  * window carries a struct per row. This exec is what a purpose-built
-  * operator buys: each side shuffles ONCE on its own key (left rows never
-  * widen, right rows never replicate), both sides sort per partition by
-  * (key, time) — Catalyst inserts the exchanges/sorts from
+  * For each left row, attach the nearest right row with the same key:
+  * backward (default) = latest right with right.time <= left.time;
+  * forward = earliest right with right.time >= left.time. The naive
+  * formulation is a non-equi range join (quadratic per key). This exec
+  * shuffles each side ONCE on its own key (left rows never widen, right
+  * rows never replicate), both sides sort per partition by (key, time) —
+  * Catalyst inserts the exchanges/sorts from
   * requiredChildDistribution/Ordering, so AQE still plans them — and a
   * single forward merge pass per partition emits each left row joined to
-  * the latest right row with right.time <= left.time (backward as-of,
-  * boundary-equal matches included). No row multiplication, no quadratic
-  * per-key work, skew bounded by the hottest single key — same contract as
-  * the composition, minus the union overhead.
+  * its match. No row multiplication, no quadratic per-key work, skew
+  * bounded by the hottest single key. The carried right values come
+  * atomically from ONE right row (a NULL field of the match stays NULL).
   *
-  * Semantics notes (both deliberately matching the composition):
+  * Semantics notes:
+  *  - Right rows at exactly left.time match in both directions.
   *  - NULL keys group like groupBy keys: a null-key left row matches
   *    null-key right rows (natural-ordering comparison, not SQL `=`).
-  *  - NULL times never match: a null right time is skipped, a null left
-  *    time emits the left row unmatched.
-  *  - Right-time ties resolve to the later-sorted row; pre-aggregate the
+  *  - NULL times never match (the DuckDB/pandas convention): a null right
+  *    time is skipped, a null left time emits the left row unmatched.
+  *  - Right-time ties resolve to an engine-chosen row; pre-aggregate the
   *    right side to unique (key, time) if determinism matters (the gated
   *    queries do).
   */
@@ -208,10 +207,7 @@ case class AsofJoinExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** DataFrame-level API over the native operator (mirrors
-  * [[graft.ops.AsofJoin.asof]]'s backward mode: same argument shape, same
-  * output columns).
-  */
+/** DataFrame-level API over the as-of operator. */
 object AsofJoinNative {
 
   private val supportedTime: DataType => Boolean = {
@@ -235,8 +231,7 @@ object AsofJoinNative {
     * aliases, so self-joins cannot collide attribute ids.
     * `toleranceUnits` bounds |left − right| time in the column's INTERNAL
     * units (micros for timestamps, days for dates, the value itself for
-    * integers); a match outside it comes back null — same contract as the
-    * composition's tolerance predicate.
+    * integers); a match outside it comes back null.
     */
   def asof(
       left: DataFrame,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.AsofJoin
+import graft.plans.AsofJoinNative
 import org.apache.spark.sql.graft.PlanBridge
 import Exact._
 
@@ -17,12 +17,11 @@ import Exact._
 object AdvancedQueries {
 
   /** Shared as-of inputs: purchases (left) and clicks deduped to unique
-    * (user, ts) rows (right). ONE derivation for all six gated as-of
-    * queries — the three-way "composition == native exec == DuckDB ASOF"
-    * equivalence is only meaningful if every variant consumes literally
-    * the same frames, so this is structural, not copy-pasted. `value`
-    * rides along; variants that do not report it drop it in their final
-    * select.
+    * (user, ts) rows (right). ONE derivation for all as-of queries, so the
+    * merge exec and DuckDB's ASOF consume literally the same frames.
+    * Colliding right times would make which click_id carries engine-chosen,
+    * hence the dedup (the oracle runs the same one). `value` rides along;
+    * variants that do not report it drop it in their final select.
     */
   private def asofInputs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val ev = Tables.events(s, dir)
@@ -35,16 +34,15 @@ object AdvancedQueries {
   }
 
   /** As-of join: for every purchase event, the user's most recent click at
-    * or before it (graft.ops.AsofJoin — union + single shuffle + per-key
-    * carry-forward; no range join, no row multiplication). The DuckDB
-    * oracle uses its native ASOF LEFT JOIN, so two INDEPENDENT
-    * implementations must agree bit-for-bit. Clicks are deduped to unique
-    * (user, ts) like the forward/tolerance variants — colliding right
-    * times would make which click_id carries engine-chosen.
+    * or before it, through graft.plans.AsofJoinNative (one shuffle per side
+    * + per-partition merge; no range join, no row multiplication). The
+    * DuckDB oracle uses its native ASOF LEFT JOIN, so two independent
+    * implementations must agree bit-for-bit. Registered as q_asof_join and
+    * q_asof_native.
     */
   def qAsofJoin(s: SparkSession, dir: String): DataFrame = {
     val (purchases, clicks) = asofInputs(s, dir)
-    AsofJoin.asof(purchases, clicks,
+    AsofJoinNative.asof(purchases, clicks,
       key = "user_id", leftTime = "ts", rightTime = "click_ts",
       rightCols = Map("click_id" -> "last_click_id", "click_ts" -> "last_click_ts"))
       .select(col("user_id"), col("event_id"), col("ts"), col("value"),
@@ -59,55 +57,13 @@ object AdvancedQueries {
       |FROM (SELECT user_id, event_id, ts, value FROM events WHERE event_type = 'purchase') p
       |ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.click_ts""".stripMargin
 
-  /** The SAME as-of join through the native operator
-    * (graft.plans.AsofJoinNative: custom LogicalPlan → SparkStrategy →
-    * AsofJoinExec, one shuffle per side + per-partition merge — no union,
-    * no window). Three independent implementations must now agree
-    * bit-for-bit: this exec, the union+window composition (q_asof_join),
-    * and DuckDB's native ASOF LEFT JOIN.
-    */
-  def qAsofNative(s: SparkSession, dir: String): DataFrame = {
-    val (purchases, clicks) = asofInputs(s, dir)
-    graft.plans.AsofJoinNative.asof(purchases, clicks,
-      key = "user_id", leftTime = "ts", rightTime = "click_ts",
-      rightCols = Map("click_id" -> "last_click_id", "click_ts" -> "last_click_ts"))
-      .select(col("user_id"), col("event_id"), col("ts"), col("value"),
-        col("last_click_id"), col("last_click_ts"))
-  }
-
-  /** Native-exec twins of the forward and tolerance variants: identical
-    * data and oracles, merge-pass execution. Every gated as-of semantics
-    * now runs through BOTH implementations against DuckDB's native ASOF.
-    */
-  def qAsofNativeFwd(s: SparkSession, dir: String): DataFrame = {
-    val (purchases, clicks) = asofInputs(s, dir)
-    graft.plans.AsofJoinNative.asof(purchases, clicks,
-      key = "user_id", leftTime = "ts", rightTime = "click_ts",
-      rightCols = Map("click_id" -> "next_click_id", "click_ts" -> "next_click_ts"),
-      direction = "forward")
-      .select(col("user_id"), col("event_id"), col("ts"),
-        col("next_click_id"), col("next_click_ts"))
-  }
-
-  def qAsofNativeTol(s: SparkSession, dir: String): DataFrame = {
-    val (purchases, clicks) = asofInputs(s, dir)
-    graft.plans.AsofJoinNative.asof(purchases, clicks,
-      key = "user_id", leftTime = "ts", rightTime = "click_ts",
-      rightCols = Map("click_id" -> "recent_click_id", "click_ts" -> "recent_click_ts"),
-      toleranceUnits = Some(600000000L)) // 10 min in timestamp micros
-      .select(col("user_id"), col("event_id"), col("ts"),
-        col("recent_click_id"), col("recent_click_ts"))
-  }
-
   /** Forward as-of join: for every purchase, the user's NEXT click at or
-    * after it (same union+window machinery, time-descending carry). Clicks
-    * are pre-aggregated to unique (user, ts) rows so colliding right times
-    * cannot make the tie nondeterministic — the same dedup runs in the
-    * oracle, whose native ASOF supports the <= direction too.
+    * after it. The oracle's native ASOF supports the <= direction too.
+    * Registered as q_asof_forward and q_asof_native_fwd.
     */
   def qAsofForward(s: SparkSession, dir: String): DataFrame = {
     val (purchases, clicks) = asofInputs(s, dir)
-    AsofJoin.asof(purchases, clicks,
+    AsofJoinNative.asof(purchases, clicks,
       key = "user_id", leftTime = "ts", rightTime = "click_ts",
       rightCols = Map("click_id" -> "next_click_id", "click_ts" -> "next_click_ts"),
       direction = "forward")
@@ -125,18 +81,17 @@ object AdvancedQueries {
 
   /** Backward as-of join with a match tolerance: the most recent click
     * counts only within 10 minutes — stale matches null out (the standard
-    * as-of tolerance, e.g. pandas merge_asof's). The tolerance is a
-    * post-carry filter on the matched right TIME, so it adds no join work;
-    * the oracle applies the same CASE to DuckDB's native ASOF result.
-    * Clicks are deduped to unique (user, ts) like qAsofForward — colliding
-    * right times would otherwise make which click_id carries engine-chosen.
+    * as-of tolerance, e.g. pandas merge_asof's). The exec checks the bound
+    * on the matched right time, so it adds no join work; the oracle applies
+    * the same CASE to DuckDB's native ASOF result. Registered as
+    * q_asof_tolerance and q_asof_native_tol.
     */
   def qAsofTolerance(s: SparkSession, dir: String): DataFrame = {
     val (purchases, clicks) = asofInputs(s, dir)
-    AsofJoin.asof(purchases, clicks,
+    AsofJoinNative.asof(purchases, clicks,
       key = "user_id", leftTime = "ts", rightTime = "click_ts",
       rightCols = Map("click_id" -> "recent_click_id", "click_ts" -> "recent_click_ts"),
-      tolerance = Some((lt, rt) => unix_micros(lt) - unix_micros(rt) <= lit(600000000L)))
+      toleranceUnits = Some(600000000L)) // 10 min in timestamp micros
       .select(col("user_id"), col("event_id"), col("ts"),
         col("recent_click_id"), col("recent_click_ts"))
   }
@@ -1564,7 +1519,7 @@ object AdvancedQueries {
     * residual — scalable because per-user version counts are bounded
     * (dimension-history-sized, not fact-sized); at extreme history depth
     * the same semantics are available as a backward as-of join on segment
-    * starts (ops/AsofJoin, plans/AsofJoinNative — segments partition the
+    * starts (plans/AsofJoinNative — segments partition the
     * per-user timeline, so latest-start-<=-ts IS interval membership).
     * Half-open intervals make duplicate segment-start timestamps
     * self-deduplicating: the superseded segment is [t, t) = empty.
@@ -1924,9 +1879,9 @@ object AdvancedQueries {
     "q_hostile_collection" -> ((qHostileCollection _, Some(qHostileCollectionSql))),
     "q_having" -> ((qHaving _, Some(qHavingSql))),
     "q_asof_join" -> ((qAsofJoin _, Some(qAsofJoinSql))),
-    "q_asof_native" -> ((qAsofNative _, Some(qAsofJoinSql))),
-    "q_asof_native_fwd" -> ((qAsofNativeFwd _, Some(qAsofForwardSql))),
-    "q_asof_native_tol" -> ((qAsofNativeTol _, Some(qAsofToleranceSql))),
+    "q_asof_native" -> ((qAsofJoin _, Some(qAsofJoinSql))),
+    "q_asof_native_fwd" -> ((qAsofForward _, Some(qAsofForwardSql))),
+    "q_asof_native_tol" -> ((qAsofTolerance _, Some(qAsofToleranceSql))),
     "q_asof_forward" -> ((qAsofForward _, Some(qAsofForwardSql))),
     "q_asof_tolerance" -> ((qAsofTolerance _, Some(qAsofToleranceSql))),
     "q_sessionize" -> ((qSessionize _, Some(qSessionizeSql))),

@@ -62,6 +62,13 @@ class PipelineSpec extends SparkSpec {
       // valid stage name but nothing materialized yet
       Runner.runCheckpointed(spark, docsChain, dir, replayFrom = Some("filter_even"))
     }
+    // an overwrite that failed part-way leaves the directory but no
+    // _SUCCESS marker: not a committed checkpoint either
+    new java.io.File(s"$dir/calc").mkdirs()
+    val e = intercept[IllegalArgumentException] {
+      Runner.runCheckpointed(spark, docsChain, dir, replayFrom = Some("filter_even"))
+    }
+    assert(e.getMessage.contains("replay checkpoint missing"))
   }
 
   test("retry-on-error: stage succeeds on attempt 3 of max 10") {
@@ -84,6 +91,20 @@ class PipelineSpec extends SparkSpec {
       Runner.runCheckpointed(spark, broken, dir)
     }
     assert(e.getMessage.contains("after 3 attempts"))
+  }
+
+  test("retry-on-error: a fatal error runs once and propagates unwrapped") {
+    val dir = tmpDir("retry3")
+    val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
+    val interrupted = Pipeline(Seeds.fromRange(spark, 5))
+      .stage("interrupted", retries = 3) { _ =>
+        attempts.incrementAndGet()
+        throw new InterruptedException("cancelled")
+      }
+    intercept[InterruptedException] {
+      Runner.runCheckpointed(spark, interrupted, dir)
+    }
+    assert(attempts.get() == 1)
   }
 
   test("typed stage maps Dataset[A] => Dataset[B] inside a pipeline") {

@@ -70,6 +70,18 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
+  test("GraftExtensions injects every function GraftFunctions.register adds") {
+    val fresh = spark.newSession() // built-ins only: no parent session state
+    val registry = fresh.sessionState.functionRegistry
+    val before = registry.listFunction().toSet
+    GraftFunctions.register(fresh)
+    val added = registry.listFunction().toSet -- before
+    assert(added.nonEmpty)
+    val missing = added --
+      org.apache.spark.sql.graft.ExtensionsBridge.functionsOf(new GraftExtensions)
+    assert(missing.isEmpty, s"absent from GraftExtensions: $missing")
+  }
+
   test("edit_distance_within matches built-in levenshtein(a, b, k) everywhere") {
     GraftFunctions.register(spark)
     import spark.implicits._

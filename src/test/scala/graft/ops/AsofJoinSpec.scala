@@ -1,128 +1,47 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.io.Seeds
+import graft.plans.{AsofFixtures, AsofJoinNative}
 
-/** AsofJoin edge semantics: <= inclusivity, no-prior-match nulls, key
-  * isolation. (The scale query q_asof_join is gated against DuckDB's
-  * native ASOF JOIN — this covers the corners cheaply.)
+/** As-of join semantics on known answers: <= / >= inclusivity, no-match
+  * nulls, key isolation, tolerance; and the naive per-key nearest-row
+  * reference on random data. The engine is the merge exec
+  * [[graft.plans.AsofJoinNative]]; its plan shape, AQE behaviour and
+  * argument checks are covered in `AsofJoinNativeSpec`.
   */
-class AsofJoinSpec extends SparkSpec {
+class AsofJoinSpec extends SparkSpec with AsofFixtures {
 
-  private def df(rows: Seq[Map[String, Any]]) = Seeds.fromMaps(spark, rows)
+  // R10 ties with L1 (inclusive both ways); R99 is key 2's only row
+  private lazy val left = frame(Seq(r(1, 10, "L1"), r(1, 20, "L2"), r(2, 15, "L3")), "lt", "lv")
+  private lazy val right = frame(Seq(r(1, 5, "R5"), r(1, 10, "R10"), r(1, 18, "R18"),
+    r(2, 99, "R99")), "rt", "rv")
+
+  private def matches(direction: String, tolSeconds: Option[Long] = None): Map[String, String] =
+    AsofJoinNative.asof(left, right, "k", "lt", "rt", Map("rv" -> "rv_out"),
+        direction, tolSeconds.map(_ * 1000000L))
+      .collect().map(x => x.getAs[String]("lv") -> x.getAs[String]("rv_out")).toMap
 
   test("picks the latest right row at or before left time, per key") {
-    val left = df(Seq(
-      Map("k" -> "a", "t" -> 10, "l" -> "L1"),
-      Map("k" -> "a", "t" -> 20, "l" -> "L2"),
-      Map("k" -> "b", "t" -> 15, "l" -> "L3")))
-    val right = df(Seq(
-      Map("k" -> "a", "rt" -> 5, "rv" -> "R5"),
-      Map("k" -> "a", "rt" -> 10, "rv" -> "R10"), // ties with L1: inclusive
-      Map("k" -> "a", "rt" -> 18, "rv" -> "R18"),
-      Map("k" -> "b", "rt" -> 99, "rv" -> "R99"))) // after L3: no match
-    val out = AsofJoin.asof(left, right, "k", "t", "rt", Map("rv" -> "last_rv"))
-      .collect().map(r => (r.getAs[String]("l"), r.getAs[String]("last_rv"))).toMap
-    assert(out("L1") == "R10") // inclusive <=
-    assert(out("L2") == "R18") // latest preceding
-    assert(out("L3") == null)  // nothing at or before, other key invisible
-  }
-
-  test("left rows keep all their columns") {
-    val left = df(Seq(Map("k" -> "a", "t" -> 10, "x" -> 1, "y" -> "z")))
-    val right = df(Seq(Map("k" -> "a", "rt" -> 1, "rv" -> 7)))
-    val row = AsofJoin.asof(left, right, "k", "t", "rt", Map("rv" -> "rv")).collect().head
-    assert(row.getAs[Long]("x") == 1L && row.getAs[String]("y") == "z"
-      && row.getAs[Long]("rv") == 7L)
+    assert(matches("backward") == Map("L1" -> "R10", "L2" -> "R18", "L3" -> null))
   }
 
   test("forward direction picks the NEXT right row at or after left time") {
-    val left = df(Seq(
-      Map("k" -> "a", "t" -> 10, "l" -> "L1"),
-      Map("k" -> "a", "t" -> 20, "l" -> "L2"),
-      Map("k" -> "b", "t" -> 15, "l" -> "L3")))
-    val right = df(Seq(
-      Map("k" -> "a", "rt" -> 10, "rv" -> "R10"), // ties with L1: inclusive
-      Map("k" -> "a", "rt" -> 18, "rv" -> "R18"),
-      Map("k" -> "b", "rt" -> 3, "rv" -> "R3")))  // before L3: no match
-    val out = AsofJoin.asof(left, right, "k", "t", "rt", Map("rv" -> "next_rv"),
-        direction = "forward")
-      .collect().map(r => (r.getAs[String]("l"), r.getAs[String]("next_rv"))).toMap
-    assert(out("L1") == "R10") // inclusive >=
-    assert(out("L2") == null)  // nothing at or after
-    assert(out("L3") == null)
+    assert(matches("forward") == Map("L1" -> "R10", "L2" -> null, "L3" -> "R99"))
   }
 
   test("tolerance nulls out matches beyond the bound, keeps close ones") {
-    import org.apache.spark.sql.functions.lit
-    val left = df(Seq(
-      Map("k" -> "a", "t" -> 100, "l" -> "L1"),  // match at 95: diff 5, kept
-      Map("k" -> "a", "t" -> 200, "l" -> "L2"))) // match at 95: diff 105, dropped
-    val right = df(Seq(Map("k" -> "a", "rt" -> 95, "rv" -> "R95")))
-    val out = AsofJoin.asof(left, right, "k", "t", "rt", Map("rv" -> "rv"),
-        tolerance = Some((lt, rt) => lt - rt <= lit(10L)))
-      .collect().map(r => (r.getAs[String]("l"), r.getAs[String]("rv"))).toMap
-    assert(out("L1") == "R95")
-    assert(out("L2") == null)
+    // L2's backward match R18 is 2 s away; L3's forward match R99 is 84 s away
+    assert(matches("backward", Some(2L)) == Map("L1" -> "R10", "L2" -> "R18", "L3" -> null))
+    assert(matches("backward", Some(1L)) == Map("L1" -> "R10", "L2" -> null, "L3" -> null))
+    assert(matches("forward", Some(60L)) == Map("L1" -> "R10", "L2" -> null, "L3" -> null))
   }
 
   test("matches the naive per-key nearest-row join on random data, all modes") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    // times drawn from a SMALL range so boundary-equal collisions occur;
-    // right times deduped per key (the operator's documented determinism
-    // precondition)
-    val left = (1 to 200).map(i =>
-      (i.toLong, s"k${rnd.nextInt(5)}", rnd.nextInt(50).toLong)).toDF("lid", "k", "t")
-    val right = (1 to 150).map(i =>
-      (s"k${rnd.nextInt(6)}", rnd.nextInt(50).toLong, i.toLong))
-      .groupBy(r => (r._1, r._2)).map(_._2.maxBy(_._3)).toSeq
-      .toDF("k", "rt", "rv")
-    val rightRows = right.as[(String, Long, Long)].collect()
-    def naive(dir: String, tol: Option[Long]): Map[Long, Option[Long]] =
-      left.as[(Long, String, Long)].collect().map { case (lid, k, t) =>
-        val cands = rightRows.filter(r => r._1 == k &&
-          (if (dir == "backward") r._2 <= t else r._2 >= t) &&
-          tol.forall(b => math.abs(t - r._2) <= b))
-        val best = if (cands.isEmpty) None
-          else Some(if (dir == "backward") cands.maxBy(_._2)._3 else cands.minBy(_._2)._3)
-        lid -> best
-      }.toMap
+    // a SMALL time range, so boundary-equal times occur
+    val (ls, rs) = random(7, 200, 150, 5, 50)
     for ((dir, tol) <- Seq(("backward", None), ("forward", None),
-        ("backward", Some(7L)), ("forward", Some(3L)))) {
-      val got = AsofJoin.asof(left, right, "k", "t", "rt", Map("rv" -> "rv"),
-          direction = dir,
-          tolerance = tol.map(b => (lt: org.apache.spark.sql.Column,
-            rt: org.apache.spark.sql.Column) =>
-            org.apache.spark.sql.functions.abs(lt - rt) <= b))
-        .selectExpr("lid", "rv").as[(Long, Option[Long])].collect().toMap
-      assert(got == naive(dir, tol), s"divergence at dir=$dir tol=$tol")
-    }
-  }
-
-  test("rejects bad direction and reserved carry name") {
-    val a = df(Seq(Map("k" -> "a", "t" -> 1)))
-    val b = df(Seq(Map("k" -> "a", "rt" -> 1, "rv" -> 1)))
-    intercept[IllegalArgumentException] {
-      AsofJoin.asof(a, b, "k", "t", "rt", Map("rv" -> "rv"), direction = "sideways")
-    }
-    intercept[IllegalArgumentException] {
-      AsofJoin.asof(a, b, "k", "t", "rt", Map("rv" -> "__rt"))
-    }
-  }
-
-  test("carried columns come atomically from ONE right row; NULL fields stay NULL") {
-    import spark.implicits._
-    // latest right row (rt=8) has rv2 = NULL; an older row (rt=5) has rv2 set.
-    // Per-column carry would back-fill rv2 from rt=5, mixing two right rows.
-    val left = Seq(("a", 10)).toDF("k", "t")
-    val right = Seq(
-      ("a", 5, Option("old1"), Option("old2")),
-      ("a", 8, Option("new1"), None: Option[String])
-    ).toDF("k", "rt", "rv1", "rv2")
-    val row = AsofJoin.asof(left, right, "k", "t", "rt",
-      Map("rv1" -> "rv1", "rv2" -> "rv2")).collect().head
-    assert(row.getAs[String]("rv1") == "new1")
-    assert(row.getAs[String]("rv2") == null) // from rt=8, not back-filled
+        ("backward", Some(7L)), ("forward", Some(3L))))
+      assert(engine(ls, rs, dir, tol) == reference(ls, rs, dir, tol),
+        s"divergence at dir=$dir tol=$tol")
   }
 }

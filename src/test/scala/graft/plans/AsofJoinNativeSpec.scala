@@ -1,176 +1,70 @@
 package graft.plans
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.functions._
 import org.scalatest.prop.TableDrivenPropertyChecks
 
 import graft.SparkSpec
-import graft.ops.AsofJoin
 
-/** The native as-of exec must be indistinguishable from the composition
-  * path (ops.AsofJoin backward mode) on every input, including the ugly
-  * ones: null times, null keys, ties, keys on one side only, empty sides.
+/** The as-of exec against the naive reference and the join + window
+  * composition of [[AsofFixtures]] on every input, including the ugly ones:
+  * null times, null keys, boundary-equal times, keys on one side only,
+  * empty sides — plus the exec's own plan shape, stats and argument checks.
+  * Known answers are in `graft.ops.AsofJoinSpec`.
   */
-class AsofJoinNativeSpec extends SparkSpec with TableDrivenPropertyChecks {
+class AsofJoinNativeSpec extends SparkSpec with AsofFixtures with TableDrivenPropertyChecks {
 
-  import scala.jdk.CollectionConverters._
-  import org.apache.spark.sql.Row
-  import org.apache.spark.sql.types._
-
-  private def ts(s: Long): Timestamp = new Timestamp(s * 1000L)
-
-  private val leftSchema = StructType(Seq(
-    StructField("k", LongType), StructField("lt", TimestampType),
-    StructField("lv", StringType)))
-  private val rightSchema = StructType(Seq(
-    StructField("k", LongType), StructField("rt", TimestampType),
-    StructField("rv", StringType)))
-
-  private def mkLeft(rows: Seq[(java.lang.Long, java.lang.Long, String)]) =
-    spark.createDataFrame(
-      rows.map { case (k, t, v) =>
-        Row(k, if (t == null) null else ts(t.longValue), v) }.asJava, leftSchema)
-
-  private def mkRight(rows: Seq[(java.lang.Long, java.lang.Long, String)]) =
-    spark.createDataFrame(
-      rows.map { case (k, t, v) =>
-        Row(k, if (t == null) null else ts(t.longValue), v) }.asJava, rightSchema)
-
-  private def both(left: Seq[(java.lang.Long, java.lang.Long, String)],
-                   right: Seq[(java.lang.Long, java.lang.Long, String)]) = {
-    val l = mkLeft(left)
-    val r = mkRight(right)
-    val carried = Map("rv" -> "rv_out", "rt" -> "rt_out")
-    val native = AsofJoinNative.asof(l, r, "k", "lt", "rt", carried)
-    val composed = AsofJoin.asof(l, r, "k", "lt", "rt", carried)
-    (native, composed)
+  /** Exec, composition and naive reference all give the same rows. */
+  private def assertAllAgree(left: Seq[R], right: Seq[R], direction: String,
+                             tolSeconds: Option[Long]): Unit = {
+    val want = reference(left, right, direction, tolSeconds)
+    assert(composition(left, right, direction, tolSeconds) == want,
+      s"composition: direction=$direction tolerance=$tolSeconds")
+    assert(engine(left, right, direction, tolSeconds) == want,
+      s"exec: direction=$direction tolerance=$tolSeconds")
   }
 
-  private def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
-    df.collect().map(_.mkString("|")).sorted.toSeq
-
-  test("native ≡ composition on a hand-picked edge-case table") {
+  test("≡ naive reference on a hand-picked edge-case table, all modes") {
     val cases = Table(
       ("left", "right"),
-      // plain backward matches incl. boundary-equal time
-      (Seq[(java.lang.Long, java.lang.Long, String)](
-        (1L: java.lang.Long, 10L: java.lang.Long, "a"),
-        (1L, 20L, "b"), (2L, 15L, "c")),
-       Seq[(java.lang.Long, java.lang.Long, String)](
-        (1L: java.lang.Long, 10L: java.lang.Long, "r1"),
-        (1L, 15L, "r2"), (2L, 16L, "r3"))),
+      // plain matches incl. boundary-equal time and a tolerance-boundary diff
+      (Seq(r(1, 10, "a"), r(1, 20, "b"), r(2, 15, "c")),
+        Seq(r(1, 10, "r1"), r(1, 15, "r2"), r(2, 16, "r3"))),
       // left-only and right-only keys
-      (Seq[(java.lang.Long, java.lang.Long, String)](
-        (1L: java.lang.Long, 10L: java.lang.Long, "a"), (3L, 10L, "b")),
-       Seq[(java.lang.Long, java.lang.Long, String)](
-        (2L: java.lang.Long, 5L: java.lang.Long, "r1"))),
+      (Seq(r(1, 10, "a"), r(3, 10, "b")), Seq(r(2, 5, "r1"))),
       // null left time (no match), null right time (skipped)
-      (Seq[(java.lang.Long, java.lang.Long, String)](
-        (1L: java.lang.Long, null, "a"), (1L, 10L, "b")),
-       Seq[(java.lang.Long, java.lang.Long, String)](
-        (1L: java.lang.Long, null, "rX"), (1L, 5L, "r1"))),
-      // null keys group together (composition semantics)
-      (Seq[(java.lang.Long, java.lang.Long, String)](
-        (null, 10L: java.lang.Long, "a"), (1L, 10L, "b")),
-       Seq[(java.lang.Long, java.lang.Long, String)](
-        (null, 5L: java.lang.Long, "rN"), (1L, 5L, "r1"))),
+      (Seq(r(1, null, "a"), r(1, 10, "b")), Seq(r(1, null, "rX"), r(1, 5, "r1"))),
+      // null keys group together
+      (Seq(r(null, 10, "a"), r(1, 10, "b")), Seq(r(null, 5, "rN"), r(1, 5, "r1"))),
       // empty right
-      (Seq[(java.lang.Long, java.lang.Long, String)](
-        (1L: java.lang.Long, 10L: java.lang.Long, "a")),
-       Seq.empty[(java.lang.Long, java.lang.Long, String)]),
-      // all right rows AFTER all left rows (nothing matches)
-      (Seq[(java.lang.Long, java.lang.Long, String)](
-        (1L: java.lang.Long, 10L: java.lang.Long, "a")),
-       Seq[(java.lang.Long, java.lang.Long, String)](
-        (1L: java.lang.Long, 20L: java.lang.Long, "r1"))))
-    forAll(cases) { (l, r) =>
-      val (native, composed) = both(l, r)
-      assert(canon(native) == canon(composed))
+      (Seq(r(1, 10, "a")), Seq.empty[R]),
+      // all right rows after all left rows
+      (Seq(r(1, 10, "a")), Seq(r(1, 20, "r1"))),
+      // per direction: one match at the tolerance boundary, one stale
+      (Seq(r(1, 100, "a"), r(1, 200, "b")), Seq(r(1, 95, "r1"), r(1, 205, "r2"))))
+    forAll(cases) { (left, right) =>
+      for (dir <- Seq("backward", "forward"); tol <- Seq(None, Some(5L)))
+        assertAllAgree(left, right, dir, tol)
     }
   }
 
   test("native ≡ composition on randomized data (fixed seed, 500×200 rows)") {
-    val rnd = new scala.util.Random(42)
-    val left = Seq.fill(500)((
-      java.lang.Long.valueOf(rnd.nextInt(20).toLong),
-      java.lang.Long.valueOf(rnd.nextInt(1000).toLong),
-      s"l${rnd.nextInt(100)}"))
-    // unique (key, time) right rows: ties are resolved engine-arbitrarily
-    // in BOTH implementations, so determinism requires the same
-    // pre-aggregation the gated queries use
-    val right = Seq.fill(200)((
-      java.lang.Long.valueOf(rnd.nextInt(20).toLong),
-      java.lang.Long.valueOf(rnd.nextInt(1000).toLong),
-      s"r${rnd.nextInt(100)}"))
-      .groupBy(t => (t._1, t._2)).map(_._2.head).toSeq
-    val (native, composed) = both(left, right)
-    assert(canon(native) == canon(composed))
+    val (left, right) = random(42, 500, 200, 20, 1000)
+    assertAllAgree(left, right, "backward", None)
   }
 
   test("forward direction ≡ composition on randomized data") {
-    val rnd = new scala.util.Random(7)
-    val left = Seq.fill(400)((
-      java.lang.Long.valueOf(rnd.nextInt(15).toLong),
-      java.lang.Long.valueOf(rnd.nextInt(800).toLong),
-      s"l${rnd.nextInt(50)}"))
-    val right = Seq.fill(150)((
-      java.lang.Long.valueOf(rnd.nextInt(15).toLong),
-      java.lang.Long.valueOf(rnd.nextInt(800).toLong),
-      s"r${rnd.nextInt(50)}"))
-      .groupBy(t => (t._1, t._2)).map(_._2.head).toSeq
-    val l = mkLeft(left)
-    val r = mkRight(right)
-    val carried = Map("rv" -> "rv_out", "rt" -> "rt_out")
-    val native = AsofJoinNative.asof(l, r, "k", "lt", "rt", carried,
-      direction = "forward")
-    val composed = AsofJoin.asof(l, r, "k", "lt", "rt", carried,
-      direction = "forward")
-    assert(canon(native) == canon(composed))
+    val (left, right) = random(7, 400, 150, 15, 800)
+    assertAllAgree(left, right, "forward", None)
   }
 
   test("tolerance ≡ composition tolerance, both directions") {
-    val rnd = new scala.util.Random(13)
-    val left = Seq.fill(300)((
-      java.lang.Long.valueOf(rnd.nextInt(10).toLong),
-      java.lang.Long.valueOf(rnd.nextInt(500).toLong),
-      s"l${rnd.nextInt(50)}"))
-    val right = Seq.fill(120)((
-      java.lang.Long.valueOf(rnd.nextInt(10).toLong),
-      java.lang.Long.valueOf(rnd.nextInt(500).toLong),
-      s"r${rnd.nextInt(50)}"))
-      .groupBy(t => (t._1, t._2)).map(_._2.head).toSeq
-    val l = mkLeft(left)
-    val r = mkRight(right)
-    val carried = Map("rv" -> "rv_out", "rt" -> "rt_out")
-    val tolMicros = 60L * 1000000L // 60 s in timestamp-internal micros
-    for (dir <- Seq("backward", "forward")) {
-      val native = AsofJoinNative.asof(l, r, "k", "lt", "rt", carried,
-        direction = dir, toleranceUnits = Some(tolMicros))
-      val sign: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
-          org.apache.spark.sql.Column =
-        if (dir == "backward") (lt, rt) => unix_micros(lt) - unix_micros(rt) <= lit(tolMicros)
-        else (lt, rt) => unix_micros(rt) - unix_micros(lt) <= lit(tolMicros)
-      val composed = AsofJoin.asof(l, r, "k", "lt", "rt", carried,
-        direction = dir, tolerance = Some(sign))
-      assert(canon(native) == canon(composed), s"direction=$dir")
-    }
+    val (left, right) = random(13, 300, 120, 10, 500)
+    for (dir <- Seq("backward", "forward"))
+      assertAllAgree(left, right, dir, Some(60L))
   }
 
-  test("native ≡ composition across AQE coalescing regimes and partition counts") {
-    val rnd = new scala.util.Random(99)
-    val left = Seq.fill(300)((
-      java.lang.Long.valueOf(rnd.nextInt(12).toLong),
-      java.lang.Long.valueOf(rnd.nextInt(600).toLong),
-      s"l${rnd.nextInt(40)}"))
-    val right = Seq.fill(100)((
-      java.lang.Long.valueOf(rnd.nextInt(12).toLong),
-      java.lang.Long.valueOf(rnd.nextInt(600).toLong),
-      s"r${rnd.nextInt(40)}"))
-      .groupBy(t => (t._1, t._2)).map(_._2.head).toSeq
-    val carried = Map("rv" -> "rv_out", "rt" -> "rt_out")
-    val expected = canon(AsofJoin.asof(mkLeft(left), mkRight(right),
-      "k", "lt", "rt", carried))
+  test("≡ naive reference across AQE coalescing regimes and partition counts") {
+    val (left, right) = random(99, 300, 100, 12, 600)
     val regimes = Seq(
       // AQE on + aggressive coalescing (both exchanges must coalesce in
       // lockstep or zipPartitions would see mismatched partition counts)
@@ -185,11 +79,10 @@ class AsofJoinNativeSpec extends SparkSpec with TableDrivenPropertyChecks {
     val saved = regimes.flatMap(_.keys).distinct
       .map(k => k -> spark.conf.getOption(k)).toMap
     try {
-      for (conf <- regimes) {
+      for (conf <- regimes; dir <- Seq("backward", "forward")) {
         conf.foreach { case (k, v) => spark.conf.set(k, v) }
-        val got = canon(AsofJoinNative.asof(mkLeft(left), mkRight(right),
-          "k", "lt", "rt", carried))
-        assert(got == expected, s"divergence under $conf")
+        assert(engine(left, right, dir, None) == reference(left, right, dir, None),
+          s"divergence under $conf, direction=$dir")
       }
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
@@ -198,9 +91,7 @@ class AsofJoinNativeSpec extends SparkSpec with TableDrivenPropertyChecks {
   }
 
   test("self-join (same source both sides) does not collide attributes") {
-    val ev = mkLeft(Seq(
-      (1L: java.lang.Long, 10L: java.lang.Long, "a"),
-      (1L, 20L, "b"), (2L, 5L, "c")))
+    val ev = frame(Seq(r(1, 10, "a"), r(1, 20, "b"), r(2, 5, "c")), "lt", "lv")
     val out = AsofJoinNative.asof(ev, ev.toDF("k", "rt", "rv"),
       "k", "lt", "rt", Map("rv" -> "prev_v"))
     assert(out.count() == 3)
@@ -209,14 +100,14 @@ class AsofJoinNativeSpec extends SparkSpec with TableDrivenPropertyChecks {
   }
 
   test("plan: one exchange per side, per-partition sorts, AsofJoinExec node") {
-    val l = mkLeft(Seq((1L: java.lang.Long, 10L: java.lang.Long, "a")))
-    val r = mkRight(Seq((1L: java.lang.Long, 5L: java.lang.Long, "r")))
-    val df = AsofJoinNative.asof(l, r, "k", "lt", "rt", Map("rv" -> "rv_out"))
+    val l = frame(Seq(r(1, 10, "a")), "lt", "lv")
+    val rr = frame(Seq(r(1, 5, "r")), "rt", "rv")
+    val df = AsofJoinNative.asof(l, rr, "k", "lt", "rt", Map("rv" -> "rv_out"))
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("AsofJoin"), s"native exec not planned:\n$plan")
+    assert(plan.contains("AsofJoin"), s"as-of exec not planned:\n$plan")
     assert("Exchange hashpartitioning".r.findAllIn(plan).size == 2,
       s"expected exactly one hash exchange per side:\n$plan")
-    assert(!plan.contains("Window"), "native path must not fall back to the window form")
+    assert(!plan.contains("Window"), "as-of must not plan a window")
   }
 
   test("unmatched rows are NULL even when right columns are non-nullable") {
@@ -225,9 +116,9 @@ class AsofJoinNativeSpec extends SparkSpec with TableDrivenPropertyChecks {
     // type default (0 / epoch) instead of NULL
     import spark.implicits._
     val l = Seq((1L, 100L, "a"), (2L, 100L, "b")).toDF("k", "lt", "lv")
-    val r = Seq((1L, 50L, 7L)).toDF("k", "rt", "rv")
-    assert(!r.schema("rv").nullable, "fixture must be non-nullable to bite")
-    val out = AsofJoinNative.asof(l, r, "k", "lt", "rt",
+    val rr = Seq((1L, 50L, 7L)).toDF("k", "rt", "rv")
+    assert(!rr.schema("rv").nullable, "fixture must be non-nullable to bite")
+    val out = AsofJoinNative.asof(l, rr, "k", "lt", "rt",
       Map("rv" -> "rv_out", "rt" -> "rt_out"))
     val unmatched = out.filter(col("k") === 2).collect().head
     assert(unmatched.isNullAt(unmatched.fieldIndex("rv_out")),
@@ -237,15 +128,41 @@ class AsofJoinNativeSpec extends SparkSpec with TableDrivenPropertyChecks {
     assert(matched.getAs[Long]("rv_out") == 7L)
   }
 
+  test("carried columns come atomically from ONE right row; NULL fields stay NULL") {
+    import spark.implicits._
+    // latest right row (rt=8) has rv2 = NULL; an older row (rt=5) has rv2 set.
+    // Per-column carry would back-fill rv2 from rt=5, mixing two right rows.
+    val left = Seq(("a", 10)).toDF("k", "t")
+    val right = Seq(
+      ("a", 5, Option("old1"), Option("old2")),
+      ("a", 8, Option("new1"), None: Option[String])
+    ).toDF("k", "rt", "rv1", "rv2")
+    val row = AsofJoinNative.asof(left, right, "k", "t", "rt",
+      Map("rv1" -> "rv1", "rv2" -> "rv2")).collect().head
+    assert(row.getAs[String]("rv1") == "new1")
+    assert(row.getAs[String]("rv2") == null) // from rt=8, not back-filled
+  }
+
+  test("left rows keep all their columns") {
+    import spark.implicits._
+    val left = Seq(("a", 10L, 1L, "z")).toDF("k", "t", "x", "y")
+    val right = Seq(("a", 1L, 7L)).toDF("k", "rt", "rv")
+    val out = AsofJoinNative.asof(left, right, "k", "t", "rt", Map("rv" -> "rv"))
+    assert(out.columns.toSeq == Seq("k", "t", "x", "y", "rv"))
+    val row = out.collect().head
+    assert(row.getAs[Long]("x") == 1L && row.getAs[String]("y") == "z"
+      && row.getAs[Long]("rv") == 7L)
+  }
+
   test("rejects mismatched or unsupported time types") {
-    val l = mkLeft(Seq((1L: java.lang.Long, 10L: java.lang.Long, "a")))
+    val l = frame(Seq(r(1, 10, "a")), "lt", "lv")
     intercept[IllegalArgumentException] {
       AsofJoinNative.asof(l, l.withColumn("rt", col("lv")), "k", "lt", "rt", Map())
     }
   }
 
   test("rejects float keys (hash normalization) and clashing carried names") {
-    val l = mkLeft(Seq((1L: java.lang.Long, 10L: java.lang.Long, "a")))
+    val l = frame(Seq(r(1, 10, "a")), "lt", "lv")
     val lf = l.withColumn("k", col("k").cast("double"))
     intercept[IllegalArgumentException] {
       AsofJoinNative.asof(lf, lf.toDF("k", "rt", "rv"), "k", "lt", "rt", Map())
@@ -256,10 +173,24 @@ class AsofJoinNativeSpec extends SparkSpec with TableDrivenPropertyChecks {
     }
   }
 
+  test("rejects bad direction, negative tolerance and reserved carried names") {
+    val l = frame(Seq(r(1, 10, "a")), "lt", "lv")
+    val rr = frame(Seq(r(1, 5, "r")), "rt", "rv")
+    intercept[IllegalArgumentException] {
+      AsofJoinNative.asof(l, rr, "k", "lt", "rt", carried, direction = "sideways")
+    }
+    intercept[IllegalArgumentException] {
+      AsofJoinNative.asof(l, rr, "k", "lt", "rt", carried, toleranceUnits = Some(-1L))
+    }
+    intercept[IllegalArgumentException] {
+      AsofJoinNative.asof(l, rr, "k", "lt", "rt", Map("rv" -> "__asof_rt"))
+    }
+  }
+
   test("stats above the node are additive, not a cross-join-shaped product") {
-    val l = mkLeft(Seq((1L: java.lang.Long, 10L: java.lang.Long, "a")))
-    val r = mkRight(Seq((1L: java.lang.Long, 5L: java.lang.Long, "r")))
-    val df = AsofJoinNative.asof(l, r, "k", "lt", "rt", Map("rv" -> "rv_out"))
+    val l = frame(Seq(r(1, 10, "a")), "lt", "lv")
+    val rr = frame(Seq(r(1, 5, "r")), "rt", "rv")
+    val df = AsofJoinNative.asof(l, rr, "k", "lt", "rt", Map("rv" -> "rv_out"))
     val node = df.queryExecution.optimizedPlan.collect {
       case p: AsofJoinPlan => p }.head
     assert(node.stats.sizeInBytes ==
