@@ -1,21 +1,17 @@
 #!/usr/bin/env python3
-"""Aggregate graft.ScaleRehearsal log lines into a per-family summary.
+"""Aggregate graft.Probe output into a per-family summary.
 
 Usage: python3 scripts/scale_summary.py LOG [LOG...]
 
-Parses `[rehearsal] q_x rows=N secs=S shuffleReadMB=A shuffleWriteMB=B
-joins{...}` lines (last occurrence of a query wins, so a re-run after a
-fix supersedes the failed line), groups queries into operator families,
-and prints a markdown table plus the slowest-query and failure lists.
+Reads the JSON lines graft.Probe prints, one per query (other lines, such
+as sbt's, are ignored; the last record of a query wins, so a re-run after
+a fix supersedes the failed one), groups queries into operator families,
+and prints a markdown table plus the slowest-query, skip and failure lists.
+A query's seconds are its build + plan + exec seconds.
 """
-import re
+import json
 import sys
 from collections import defaultdict
-
-LINE = re.compile(
-    r"\[rehearsal\] (q\S+) rows=(\d+) secs=([\d.]+) "
-    r"shuffleReadMB=([\d.]+) shuffleWriteMB=([\d.]+) joins\{([^}]*)\}")
-FAIL = re.compile(r"\[rehearsal\] (q\S+) FAILED secs=([\d.]+) err=(.*)")
 
 FAMILIES = [
     ("streaming", ["q_stream_"]),
@@ -69,19 +65,25 @@ def family_of(q):
 
 
 def main():
-    results, failures = {}, {}
+    results, failures, skipped = {}, {}, {}
     for path in sys.argv[1:]:
         for raw in open(path, errors="replace"):
-            m = LINE.search(raw)
-            if m:
-                q, rows, secs, rd, wr, joins = m.groups()
-                results[q] = dict(rows=int(rows), secs=float(secs),
-                                  rd=float(rd), wr=float(wr), joins=joins)
-                failures.pop(q, None)
+            if not raw.startswith("{"):
                 continue
-            f = FAIL.search(raw)
-            if f and f.group(1) not in results:
-                failures[f.group(1)] = f.group(3).strip()
+            r = json.loads(raw)
+            q = r["query"]
+            for seen in (results, failures, skipped):
+                seen.pop(q, None)
+            if r["status"] == "ok":
+                joins = " ".join(f"{k}={v}" for k, v in sorted(r["joins"].items()))
+                results[q] = dict(
+                    rows=r["rows"], secs=r["build_s"] + r["plan_s"] + r["exec_s"],
+                    rd=r["shuffle_read_bytes"] / 1e6, wr=r["shuffle_write_bytes"] / 1e6,
+                    joins=joins or "none")
+            elif r["status"] == "skip":
+                skipped[q] = r["error"]
+            else:
+                failures[q] = r["error"]
 
     fams = defaultdict(list)
     for q, r in results.items():
@@ -98,12 +100,16 @@ def main():
         print(f"| {fam} | {len(qs)} | {tot:.1f} | {wq} | "
               f"{wr_['secs']:.1f} | {gb:.1f} |")
 
-    print(f"\nok={len(results)} failed={len(failures)} "
+    print(f"\nok={len(results)} skipped={len(skipped)} failed={len(failures)} "
           f"total={sum(r['secs'] for r in results.values()):.1f}s")
     print("\nslowest 12:")
     for q, r in sorted(results.items(), key=lambda t: -t[1]["secs"])[:12]:
         print(f"  {q:32s} {r['secs']:7.1f}s  rd={r['rd']:.0f}MB  "
               f"joins{{{r['joins']}}}")
+    if skipped:
+        print("\nSKIPPED (ScaleGuard):")
+        for q, err in sorted(skipped.items()):
+            print(f"  {q}: {err[:160]}")
     if failures:
         print("\nFAILURES:")
         for q, err in sorted(failures.items()):

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Ann
@@ -27,14 +26,7 @@ object AnnSampleFit {
     val k = args.lift(1).map(_.toInt).getOrElse(16)
     val sampleMod = args.lift(2).map(_.toInt).getOrElse(10)
     val nprobe = args.lift(3).map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionConf.overlay(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionConf.local()
 
     // dir = "clustered:<n>" synthesizes a deterministic 16-cluster corpus
     // (center c lights dims 4c..4c+3; members add a small integer-formula

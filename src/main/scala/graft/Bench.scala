@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR.
@@ -20,7 +19,6 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val out = sys.env.getOrElse("BENCH_OUT", "/root/repo/BENCH_OUT.json")
     // optional args: bench only these queries (dev feedback loop). Unknown
     // names fail loudly BEFORE the session build and warm-up — a typo must
@@ -29,13 +27,7 @@ object Bench {
     val only = args.toSet
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    val spark = SessionConf.overlay(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionConf.local()
 
     // Warm the session (JVM, whole-stage codegen, parquet reader) outside
     // any per-query timing — otherwise the alphabetically-first query

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** N× synthetic generator for the scale rehearsal (SCALE.md): unions N
@@ -118,14 +118,7 @@ object ScaleUp {
     require(args.length >= 2, "usage: ScaleUp <srcDir> <outDir> [copies]")
     val (srcDir, outDir) = (args(0), args(1))
     val copies = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionConf.overlay(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionConf.local()
     val gens: Seq[(String, (DataFrame, Int) => DataFrame)] = Seq(
       "documents" -> documentsCopy,
       "embeddings" -> embeddingsCopy,

@@ -2,14 +2,33 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** SPARK_GRAFT_CONF="k=v;k=v" — arbitrary session-conf overlay for
+/** The one place a graft session is built, and the session-level conf
+  * every graft session carries.
+  *
+  * SPARK_GRAFT_CONF="k=v;k=v" — arbitrary session-conf overlay for
   * robustness sweeps (AQE off, exchange reuse off, odd partition counts…).
-  * ONE parser for Verify and Bench: segments are trimmed (a space after
+  * ONE parser for every session: segments are trimmed (a space after
   * ';' must not silently turn a real key into an unknown one, faking a
   * green sweep under default configs) and malformed segments fail loudly
   * with the offending text.
   */
 object SessionConf {
+  /** The graft session on `local[cpus]`: one shuffle partition per core,
+    * UTC, no UI, WARN logging, plus [[overlay]]. `cpus` defaults to
+    * SPARK_GRAFT_CPUS, else the processors this JVM may use. Returns the
+    * running session if one exists (`getOrCreate`). */
+  def local(cpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors)(_.trim.toInt)): SparkSession = {
+    val spark = overlay(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def overlay(builder: SparkSession.Builder): SparkSession.Builder = {
     // Graft base default, set BEFORE the env overlay so SPARK_GRAFT_CONF
     // can still override it in sweeps: the driver-generated parquet holds
@@ -21,6 +40,12 @@ object SessionConf {
     // Tables.ntzToLtz stays as the local belt for externally-built
     // sessions that skip this overlay.
     builder.config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    // events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized
+    // reader rejects; read it as raw long nanos (Tables.loadEvents
+    // truncates to micros). Decided here, once, for the same reason as
+    // the NTZ choice above: a query must not flip session conf that a
+    // later reader in the same session sees.
+    builder.config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Shuffle-writer selection (r16, guide §2.2 "fewer, larger blocks"):
     // the bypass-merge writer creates one FILE per reduce partition per
     // map task — M×R file creations per shuffle — while the tungsten sort

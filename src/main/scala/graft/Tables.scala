@@ -93,11 +93,19 @@ object Tables {
     * agrees bit-for-bit. Narrow per-row projection; no perf impact.
     */
   private def loadEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    nanosAsLong(spark)
     val raw = load(spark, sfDir, "events")
     if (raw.schema("ts").dataType == LongType)
       raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
     else raw
+  }
+
+  /** Read parquet TIMESTAMP(NANOS) as long nanos. [[SessionConf.overlay]]
+    * sets this for every graft session; the set here is the fallback for a
+    * session built without it, and leaves a graft session's conf alone. */
+  private[graft] def nanosAsLong(spark: SparkSession): Unit = {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    if (!spark.conf.getOption(key).contains("true")) spark.conf.set(key, "true")
   }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")

@@ -50,8 +50,7 @@ object StreamingQueries {
   }
 
   private def eventStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    graft.Tables.nanosAsLong(s)
     val schema = s.read.parquet(s"$dir/events.parquet").schema
     val raw = streamTable(s, dir, "events.parquet", schema)
     val fixed =
@@ -106,7 +105,7 @@ object StreamingQueries {
     * micro-batch are pure fixed cost on a real disk. Root them on tmpfs
     * (/dev/shm) when present: measured on the r12 box this cuts the
     * per-drain state-store lifecycle cost (the 0.6–0.9 s addBatch slice of
-    * the GRAFT_STREAM_DEBUG decomposition) without touching semantics.
+    * the per-batch durationMs breakdown) without touching semantics.
     * `spark.graft.streamCkptRoot` pins it elsewhere; production users
     * writing REAL sinks own their own checkpointLocation entirely.
     */
@@ -165,7 +164,10 @@ object StreamingQueries {
   private[queries] def withDrainConfs[A](sess: SparkSession, width: Int)(body: => A): A = {
     val keys = Seq("spark.sql.shuffle.partitions" -> width.toString,
       ckptChecksumKey -> "false", ckptManagerKey -> fsCkptManager)
-    val prev = keys.map { case (k, _) => k -> sess.conf.getOption(k) }
+    // getAll holds only explicitly set keys; getOption would report a
+    // default as set, and the restore would then pin it into the conf.
+    val explicit = sess.conf.getAll
+    val prev = keys.map { case (k, _) => k -> explicit.get(k) }
     keys.foreach { case (k, v) => sess.conf.set(k, v) }
     try body
     finally prev.foreach {
@@ -206,12 +208,6 @@ object StreamingQueries {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        if (sys.env.contains("GRAFT_STREAM_DEBUG")) {
-          q.recentProgress.foreach { pr =>
-            System.err.println(s"[drain $name] batch ${pr.batchId} rows=${pr.numInputRows} " +
-              s"durationMs=${pr.durationMs}")
-          }
-        }
       }
     } finally {
       // tmpfs is RAM: drop the drained query's throwaway checkpoint now
@@ -508,7 +504,6 @@ object StreamingQueries {
     * streaming dedup carries); gates are stateless and fuse into the scan.
     */
   def qStreamCuration(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     val schema = s.read.parquet(s"$dir/documents.parquet").schema
     val docs = streamTable(s, dir, "documents.parquet", schema)
     val norm = sha2(regexp_replace(

@@ -8,9 +8,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * LogicalPlan node into a DataFrame (Spark exposes no public constructor
   * for this, so — like every plan-extending Spark library — this object
   * lives under `org.apache.spark.sql` solely to reach `Dataset.ofRows`),
-  * and unloading the state-store provider registry between throwaway
-  * streaming drains. Nothing else in the library uses package-private
-  * Spark API.
+  * unloading the state-store provider registry between throwaway
+  * streaming drains, and draining the listener bus for `graft.Probe`.
+  * Nothing else in the library uses package-private Spark API.
   */
 object PlanBridge {
 
@@ -23,6 +23,13 @@ object PlanBridge {
     */
   def unloadAllStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
+
+  /** Block until every event posted so far has reached the listeners:
+    * listener delivery is asynchronous, so counters read right after an
+    * action would otherwise miss its last tasks. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 

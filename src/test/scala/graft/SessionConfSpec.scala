@@ -1,0 +1,28 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+class SessionConfSpec extends SparkSpec {
+
+  test("events and streaming queries leave the session conf as they found it") {
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    Seq("q_stream_tumbling", "q_stream_curation", "q_sessionize")
+      .foreach(q => SparkEntry.queries(q)(s, sfDir).collect())
+    Tables.events(s, sfDir).count()
+    assert(s.conf.getAll == before)
+  }
+
+  test("SessionConf is the only place under src/ that builds a SparkSession") {
+    val needle = "SparkSession" + ".builder"
+    val st = Files.walk(Paths.get("src"))
+    val hits: Seq[Path] =
+      try st.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && Files.readString(p).contains(needle))
+        .toSeq
+      finally st.close()
+    assert(hits.map(_.getFileName.toString) == Seq("SessionConf.scala"), hits.mkString(", "))
+  }
+}
