@@ -2,6 +2,7 @@ package graft.core
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.Path
 
@@ -87,14 +88,15 @@ object Runner {
   }
 
   /** Retries non-fatal failures only: an interrupt, OOM or linkage error
-    * propagates at once, unwrapped. */
+    * propagates at once, unwrapped, and so does a cancelled Spark job
+    * (someone asked it to stop; running it again would undo that). */
   private def withRetries[T](retries: Int, stage: String)(body: => T): T = {
     var attempt = 0
     var last: Throwable = null
     while (attempt <= retries) {
       try return body
       catch {
-        case NonFatal(e) =>
+        case NonFatal(e) if !cancelled(e) =>
           last = e
           attempt += 1
       }
@@ -102,4 +104,11 @@ object Runner {
     throw new RuntimeException(
       s"stage '$stage' failed after ${retries + 1} attempts: ${last.getMessage}", last)
   }
+
+  /** A job cancellation anywhere in the cause chain (writers may wrap it). */
+  private def cancelled(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case t: SparkThrowable => t.getCondition == "SPARK_JOB_CANCELLED"
+      case _ => false
+    }
 }

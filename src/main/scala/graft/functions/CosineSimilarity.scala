@@ -113,9 +113,6 @@ object GraftFunctions {
     fn("hamming_distance", classOf[HammingDistance], 2,
       "_FUNC_(a, b) - byte-wise hamming distance of two strings (codegen'd).")(
       c => HammingDistance(c(0), c(1))),
-    fn("dot_product", classOf[DotProduct], 2,
-      "_FUNC_(a, b) - dot product of two float arrays (codegen'd fused loop).")(
-      c => DotProduct(c(0), c(1))),
     fn("decimal_dot", classOf[DecimalDot], 2,
       "_FUNC_(a, b) - DECIMAL(28,14)-exact dot product of two float arrays " +
         "(fused form of the oracle-arithmetic HOF fold; bit-identical).")(
@@ -135,10 +132,6 @@ object GraftFunctions {
       "_FUNC_(a, b) - Jaro-Winkler similarity (standard params: window " +
         "max/2-1, prefix<=4, scale 0.1, boost>0.7; matches DuckDB).")(
       c => JaroWinkler(c(0), c(1))),
-    fn("srp_fingerprint", classOf[SrpFingerprint], 2,
-      "_FUNC_(emb, planes) - sign-random-projection bit fingerprint " +
-        "(exact DECIMAL(28,14) accumulation, fused).")(
-      c => SrpFingerprint(c(0), c(1))),
     // Spark ships BloomFilterAggregate/BloomFilterMightContain for its
     // runtime-filter rewrite but does not register them as SQL functions;
     // exposing them here (same names Databricks uses) gives queries the
@@ -167,13 +160,12 @@ object GraftFunctions {
         "'NFC'|'NFD'|'NFKC'|'NFKD' (codegen'd JDK Normalizer).")(
       c => UnicodeNormalize(c(0), c(1))))
 
-  /** Idempotent runtime registration on a live session: the SQL functions
-    * plus the HOF→kernel optimizer rewrite. */
+  /** Idempotent runtime registration of the SQL functions on a live
+    * session; nothing else in the session changes. */
   def register(spark: SparkSession): Unit = {
     all.foreach { case (id, info, build) =>
       spark.sessionState.functionRegistry.registerFunction(id, info, build)
     }
-    graft.plans.DotProductRewrite.install(spark)
   }
 }
 
@@ -184,7 +176,6 @@ object GraftFunctions {
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => graft.plans.DotProductRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
   }
 }

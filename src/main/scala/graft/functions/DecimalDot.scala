@@ -15,12 +15,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, Decimal, DecimalType, Do
   *           finished with CAST(... AS DOUBLE)
   *   sqdist: the same fold over (x − y)·(x − y)
   *
-  * [[graft.plans.DotProductRewrite]] deliberately does NOT touch these
-  * decimal-accumulated forms (they are the engine-agnostic exactness
-  * contract with the DuckDB oracle), so every pair scored by an exact
-  * similarity query pays interpreted lambda eval and a materialized
+  * Spelled as HOFs, these decimal-accumulated forms (the engine-agnostic
+  * exactness contract with the DuckDB oracle) make every pair scored by an
+  * exact similarity query pay interpreted lambda eval and a materialized
   * per-pair Decimal array. These kernels run the SAME arithmetic in one
-  * tight loop, bit-identically (the [[SrpFingerprint]] precedent):
+  * tight loop, bit-identically (the SRP fingerprint's bits are signs of
+  * decimal_dot too):
   *
   *  - each term is `BigDecimal.valueOf(double).setScale(14, HALF_UP)` —
   *    exactly Spark's double→DECIMAL(28,14) cast (shortest-repr
@@ -38,7 +38,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, Decimal, DecimalType, Do
   *  - a term or accumulator overflowing DECIMAL(28,14) throws loudly in
   *    BOTH ANSI and legacy modes (the legacy HOF would silently null —
   *    silent divergence is the one thing an exactness kernel must never
-  *    do; see SrpFingerprint's identical stance).
+  *    do).
   *
   * FunctionsSpec pins kernel ≡ HOF over the real corpus for both shapes.
   */
@@ -56,8 +56,8 @@ abstract class DecimalFold extends BinaryExpression {
 
   // Validation at ANALYSIS time, not construction: a constructor require in
   // this abstract parent would also run during task DEserialization, where
-  // the subclass fields are still null (see SrpFingerprint's identical
-  // stance for the Column-API lazy-resolution variant of the same problem).
+  // the subclass fields are still null, and the Column API hands in
+  // lazily-converted nodes whose dataType is a placeholder until resolution.
   // Sides may be float or double arrays, independently (the IVF path
   // compares float embeddings against double centroids); a float element
   // is widened with the same CAST(x AS DOUBLE) the HOF spells.

@@ -54,19 +54,6 @@ case class EditDistanceWithin(first: Expression, second: Expression, third: Expr
 
 object EditDistanceWithin {
 
-  /** Character-bag screen telemetry (debug only): pairs screened out by
-    * the bag lower bound vs pairs that ran the DP. Counted only when
-    * GRAFT_ED_DEBUG is set at class-load (the JIT removes the disabled
-    * branch), drained by [[screenStats]].
-    */
-  private val debugCounts: Boolean = sys.env.contains("GRAFT_ED_DEBUG")
-  private val nScreened = new java.util.concurrent.atomic.LongAdder
-  private val nDp = new java.util.concurrent.atomic.LongAdder
-
-  /** (pairs dropped by the bag screen, pairs that ran the DP) since JVM
-    * start — all zeros unless GRAFT_ED_DEBUG was set. */
-  def screenStats: (Long, Long) = (nScreened.sum(), nDp.sum())
-
   /** Per-thread byte-count scratch for the bag screen — allocation-free
     * per call; touched entries are re-zeroed on exit (never a full fill).
     */
@@ -90,7 +77,7 @@ object EditDistanceWithin {
     * out of reach. Incremental |·| tracking: pushing a count away from
     * zero adds 1 to D, toward zero subtracts 1 — no 256-entry walk.
     */
-  private def bagBeyond(x: Array[Byte], y: Array[Byte], k: Int): Boolean = {
+  private[functions] def bagBeyond(x: Array[Byte], y: Array[Byte], k: Int): Boolean = {
     val cnt = bagCnt.get()
     var d = 0
     var i = 0
@@ -128,11 +115,7 @@ object EditDistanceWithin {
     if (m == 0) return n
     // k < max length (else the DP can't return -1 and the screen can't
     // fire) — guards the 2*k multiply against overflow too (k ≤ m+n here)
-    if (k < math.max(n, m) && bagBeyond(x, y, k)) {
-      if (debugCounts) nScreened.increment()
-      return -1
-    }
-    if (debugCounts) nDp.increment()
+    if (k < math.max(n, m) && bagBeyond(x, y, k)) return -1
     // the distance never exceeds max(n, m), so a larger threshold is
     // equivalent — and clamping keeps inf = kk + 1 from overflowing when
     // k = Int.MaxValue (where inf would wrap negative and clamp every DP

@@ -1448,14 +1448,20 @@ object AdvancedQueries {
     * chains) even though the query's cost is provably bounded. We raise
     * the valve to that proven 66·n bound (one O(1)-row count on the
     * dimension table, control-plane only) instead of disabling it, so a
-    * genuinely runaway recursion elsewhere in the session still fails.
+    * genuinely runaway recursion elsewhere still fails. The limit is read
+    * when the frame executes, so it and the `supplier_rec` view live on a
+    * child session (`newSession`: own conf and temp views, shared
+    * SparkContext) that starts from the caller's runtime conf and whose
+    * frame is returned; the caller's session is left as it was.
     */
   def qRecursive(s: SparkSession, dir: String): DataFrame = {
-    val sup = Tables.supplier(s, dir)
+    val child = s.newSession()
+    s.conf.getAll.foreach { case (k, v) => if (s.conf.isModifiable(k)) child.conf.set(k, v) }
+    val sup = Tables.supplier(child, dir)
     sup.createOrReplaceTempView("supplier_rec")
     val rowBound = math.max(1000000L, sup.count() * 66L)
-    s.conf.set("spark.sql.cteRecursionRowLimit", rowBound.toString)
-    s.sql(
+    child.conf.set("spark.sql.cteRecursionRowLimit", rowBound.toString)
+    child.sql(
       """WITH RECURSIVE chain(suppkey, anc, depth) AS (
         |  SELECT s_suppkey, CAST(s_suppkey AS BIGINT), 0 FROM supplier_rec
         |  UNION ALL

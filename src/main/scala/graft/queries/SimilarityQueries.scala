@@ -561,7 +561,7 @@ object SimilarityQueries {
     "0123456789abcdef".indexOf(md5hex(s"$p:$i").charAt(0)) - 7.5))
 
   /** The declarative decimal spelling of the SRP fingerprint — kept as the
-    * reference semantics the SrpFingerprint kernel must match bit-for-bit
+    * reference semantics [[srpFingerprint]] must match bit-for-bit
     * (FunctionsSpec asserts it against THIS string, so query and test
     * cannot drift apart).
     */
@@ -571,6 +571,18 @@ object SimilarityQueries {
       |      CAST(CAST(a AS DOUBLE) * b AS DECIMAL(28,14))),
       |    CAST(0 AS DECIMAL(28,14)), (acc, x) -> CAST(acc + x AS DECIMAL(28,14))) > 0
       |  THEN '1' ELSE '0' END), '')""".stripMargin
+
+  /** The SRP fingerprint the query computes: bit p is the sign of
+    * `decimal_dot(emb, plane p)`, the fused form of [[srpHofExpr]]'s
+    * DECIMAL(28,14) fold, so each bit is the sign of the same exact sum. A
+    * NULL embedding, a NULL element or a length mismatch makes decimal_dot
+    * NULL, which the CASE turns into '0' (all-'0', never NULL, as in the
+    * HOF); an overflowing term or sum throws from decimal_dot. Needs
+    * [[graft.functions.GraftFunctions.register]] on the session.
+    */
+  def srpFingerprint(emb: Column): Column =
+    array_join(transform(typedLit(srpPlanes), p =>
+      when(call_function("decimal_dot", emb, p) > 0, lit("1")).otherwise(lit("0"))), "")
 
   /** SIZING RULE (read before running at corpus scale): candidate volume
     * for b-bit bands over N random-ish vectors is ~N²·bands/2^b pairs —
@@ -609,21 +621,15 @@ object SimilarityQueries {
 
   private def embeddingNeardup(s: SparkSession, dir: String, bandBits: Int): DataFrame = {
     val nBands = 64 / bandBits
+    graft.functions.GraftFunctions.register(s)
     // All 64 bits fold in a single narrow pass per vector, with NO
     // corpus×planes row explosion and NO groupBy shuffle to reassemble
-    // fingerprints.
-    val planes = srpPlanes
-    // Fingerprint via the fused kernel (functions/SrpFingerprint): the
-    // same DECIMAL(28,14) accumulation the declarative HOF spelling does —
-    // FunctionsSpec pins bit-identity over this very corpus — minus ~8k
-    // interpreted lambda evals per row. Measured ~25%: the exact BigDecimal
-    // ops themselves dominate this stage, which is the price of the
-    // engine-agnostic sign contract (a production double-precision variant
-    // would use the codegen'd dot_product kernel and tolerate rare sign
-    // flips near zero).
+    // fingerprints. Each bit is one decimal_dot (FunctionsSpec pins the
+    // fingerprint bit-identical to srpHofExpr over this very corpus); the
+    // exact BigDecimal ops dominate this stage, which is the price of the
+    // engine-agnostic sign contract.
     val fp = Tables.embeddings(s, dir)
-      .withColumn("fp",
-        graft.functions.SrpFingerprint.fingerprint(col("embedding"), planes))
+      .withColumn("fp", srpFingerprint(col("embedding")))
       .select(col("vec_id"), col("fp"))
       .cache()
     val bands = fp.select(col("vec_id"),
@@ -636,7 +642,6 @@ object SimilarityQueries {
       .distinct()
     // verify stage: fused exact-decimal kernel, bit-identical to the
     // declarative DECIMAL(28,14) fold (FunctionsSpec pins it)
-    graft.functions.GraftFunctions.register(s)
     val pairDot = "decimal_dot(ea, eb)"
     val emb = Tables.embeddings(s, dir)
       .withColumn("nrm", expr("SQRT(decimal_dot(embedding, embedding))"))

@@ -107,6 +107,38 @@ class PipelineSpec extends SparkSpec {
     assert(attempts.get() == 1)
   }
 
+  test("retry-on-error: a cancelled job runs once and the cancellation propagates") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = tmpDir("retry4")
+    val sc = spark.sparkContext
+    val group = "graft-cancel-" + java.util.UUID.randomUUID()
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val canceller = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group &&
+            fired.compareAndSet(false, true))
+          sc.cancelJob(e.jobId)
+    }
+    val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
+    val slowRow = udf { (i: Long) => Thread.sleep(200); i }
+    val slow = Pipeline(Seeds.fromRange(spark, 8))
+      .stage("slow", retries = 3) { df =>
+        attempts.incrementAndGet()
+        df.withColumn("idx", slowRow(col("idx")))
+      }
+    sc.addSparkListener(canceller)
+    sc.setJobGroup(group, "cancel the first job of a slow stage")
+    val e =
+      try intercept[Exception](Runner.runCheckpointed(spark, slow, dir))
+      finally { sc.clearJobGroup(); sc.removeSparkListener(canceller) }
+    val conditions = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collect { case t: org.apache.spark.SparkThrowable => t.getCondition }.toSeq
+    assert(fired.get())
+    assert(conditions.contains("SPARK_JOB_CANCELLED"), s"$e")
+    assert(attempts.get() == 1)
+  }
+
   test("typed stage maps Dataset[A] => Dataset[B] inside a pipeline") {
     import spark.implicits._
     val p = Pipeline(Seeds.fromRange(spark, 10))

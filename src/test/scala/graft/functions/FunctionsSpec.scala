@@ -140,6 +140,16 @@ class FunctionsSpec extends SparkSpec {
       }
       cur
     }
+    // the pairs that reach the screen in `distance` (non-empty ASCII, length
+    // gap ≤ k < max length): true iff the screen rejects them
+    def screens(a: String, b: String, k: Int): Option[Boolean] =
+      if (a.isEmpty || b.isEmpty || math.abs(a.length - b.length) > k ||
+          k >= math.max(a.length, b.length)) None
+      else Some(EditDistanceWithin.bagBeyond(a.getBytes("US-ASCII"), b.getBytes("US-ASCII"), k))
+    // equal lengths within k, so only the bag screen can reject before the DP
+    assert(screens("aaaa", "bbbb", 3).contains(true))
+    assert(EditDistanceWithin.distance(
+      UTF8String.fromString("aaaa"), UTF8String.fromString("bbbb"), 3) == -1)
     var screenedSeen = 0
     var dpSeen = 0
     for (_ <- 1 to 2000) {
@@ -151,9 +161,13 @@ class FunctionsSpec extends SparkSpec {
       val got = EditDistanceWithin.distance(ua, ub, k)
       val want = ua.levenshteinDistance(ub, k)
       assert(got == want, s"kernel diverged on ('$a','$b',$k): got $got want $want")
-      if (got == -1) screenedSeen += 1 else dpSeen += 1
+      screens(a, b, k) match {
+        case Some(true) => screenedSeen += 1
+        case Some(false) => dpSeen += 1
+        case None =>
+      }
     }
-    // both paths must actually have been exercised
+    // both screen outcomes must actually have been exercised
     assert(screenedSeen > 100 && dpSeen > 100,
       s"fuzz draw did not cover both screen outcomes ($screenedSeen / $dpSeen)")
   }
@@ -227,19 +241,17 @@ class FunctionsSpec extends SparkSpec {
     assert(viol == 0)
   }
 
-  test("srp_fingerprint kernel ≡ the decimal HOF spelling on the real corpus") {
+  test("decimal_dot SRP fingerprint ≡ the decimal HOF spelling on the corpus") {
     import org.apache.spark.sql.functions.{col, expr, typedLit}
+    import graft.queries.SimilarityQueries.{srpFingerprint, srpHofExpr, srpPlanes}
     graft.functions.GraftFunctions.register(spark)
-    // the SAME plane matrix and HOF spelling the production query uses —
-    // a drift in either immediately breaks this pin
-    val planes = graft.queries.SimilarityQueries.srpPlanes
-    val hof = graft.queries.SimilarityQueries.srpHofExpr
+    // the SAME plane matrix, fingerprint and HOF spelling the production
+    // query uses — a drift in any of them immediately breaks this pin
     val both = graft.Tables.embeddings(spark, sfDir)
-      .withColumn("planes", typedLit(planes))
+      .withColumn("planes", typedLit(srpPlanes))
       .select(col("vec_id"),
-        expr(hof).as("via_hof"),
-        graft.functions.SrpFingerprint.fingerprint(col("embedding"), planes)
-          .as("via_kernel"))
+        expr(srpHofExpr).as("via_hof"),
+        srpFingerprint(col("embedding")).as("via_query"))
       .collect()
     assert(both.nonEmpty)
     for (r <- both)
@@ -256,15 +268,33 @@ class FunctionsSpec extends SparkSpec {
       Row(3L, Seq(1.0f, 2.0f))).asJava,
       StructType(Seq(StructField("vec_id", LongType),
         StructField("embedding", ArrayType(FloatType)))))
-    val w = weird.withColumn("planes", typedLit(planes))
-      .select(expr(hof).as("via_hof"),
-        graft.functions.SrpFingerprint.fingerprint(col("embedding"), planes)
-          .as("via_kernel"))
+    val w = weird.withColumn("planes", typedLit(srpPlanes))
+      .select(expr(srpHofExpr).as("via_hof"),
+        srpFingerprint(col("embedding")).as("via_query"))
       .collect()
     for (r <- w) {
       assert(r.getString(0) == "0" * 64 && r.getString(1) == "0" * 64,
         s"degenerate row must give all-zeros in both spellings: $r")
     }
+  }
+
+  test("every graft SQL function has a caller under queries/ or ops/") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val sources = Seq("queries", "ops").flatMap { d =>
+      val st = Files.walk(Paths.get("src/main/scala/graft", d))
+      try st.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(Files.readString).toList
+      finally st.close()
+    }
+    assert(sources.nonEmpty)
+    // a call of the SQL name, or a use of the expression class
+    val uncalled = GraftFunctions.all.collect { case (id, info, _) =>
+      val cls = info.getClassName.split('.').last
+      val use = s"\\b(${id.funcName}|$cls)\\s*[(.]".r
+      if (sources.exists(use.findFirstIn(_).isDefined)) None else Some(id.funcName)
+    }.flatten
+    assert(uncalled.isEmpty, s"registered but never called: ${uncalled.mkString(", ")}")
   }
 
   test("DistinctSetAgg (typed Aggregator) matches sort_array(collect_set())") {
