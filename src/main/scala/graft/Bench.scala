@@ -1,6 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR.
   *
   * Output contract (driver-parseable): ONE COMPACT JSON line on stdout —
@@ -29,33 +31,7 @@ object Bench {
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     val spark = SessionConf.local()
 
-    // Warm the session (JVM, whole-stage codegen, parquet reader) outside
-    // any per-query timing — otherwise the alphabetically-first query
-    // absorbs all one-time compile cost. r2 showed aggregate warm-up alone
-    // is not enough: the first query to run a shuffled join (q10_returns)
-    // still paid ~5s of exchange/join codegen. Warm each major plan family
-    // (agg, join, window, explode) on the tiny sf0.001 tables.
-    SparkEntry.entry(spark).foreach(_ => ())
-    // prefer the smallest sf for cheap warm-up; fall back to the bench dir
-    // so the warm-up still happens (slower, but honest timings beat a
-    // silently skipped warm-up) on hosts with a different data layout
-    val warmSf =
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/root/testdata/sf0.001")))
-        "/root/testdata/sf0.001"
-      else {
-        // visible marker: warming on the bench data itself page-caches the
-        // files the timed sweep re-reads, mildly favoring the three warmed
-        // queries — a consumer comparing per-query numbers should know
-        System.err.println(s"[bench] warm-up fallback: sf0.001 absent, warming on $sfDir")
-        sfDir
-      }
-    Seq("q3_join", "q_window_rank", "q_array_explode").foreach { q =>
-      SparkEntry.queries.get(q).foreach(fn =>
-        try fn(spark, warmSf).foreach(_ => ())
-        catch { case scala.util.control.NonFatal(_) => () })
-    }
-    spark.catalog.clearCache()
-    Tables.lineitem(spark, sfDir).count()
+    warmUp(spark, sfDir)
 
     def esc(s: String): String = s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
@@ -169,5 +145,36 @@ object Bench {
       System.err.println(s"[bench] ${errors.size} queries failed: ${errors.keys.mkString(", ")}")
       sys.exit(1)
     }
+  }
+
+  /** Warm the session (JVM, whole-stage codegen, parquet reader) outside
+    * any per-query timing — otherwise the alphabetically-first query
+    * absorbs all one-time compile cost. r2 showed aggregate warm-up alone
+    * is not enough: the first query to run a shuffled join (q10_returns)
+    * still paid ~5s of exchange/join codegen. Warm each major plan family
+    * (agg, join, window, explode) on the tiny sf0.001 tables, then read
+    * `sfDir`'s lineitem once. Bench and Probe call it before timing. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    SparkEntry.entry(spark).foreach(_ => ())
+    // prefer the smallest sf for cheap warm-up; fall back to the bench dir
+    // so the warm-up still happens (slower, but honest timings beat a
+    // silently skipped warm-up) on hosts with a different data layout
+    val warmSf =
+      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/root/testdata/sf0.001")))
+        "/root/testdata/sf0.001"
+      else {
+        // visible marker: warming on the bench data itself page-caches the
+        // files the timed sweep re-reads, mildly favoring the three warmed
+        // queries — a consumer comparing per-query numbers should know
+        System.err.println(s"[bench] warm-up fallback: sf0.001 absent, warming on $sfDir")
+        sfDir
+      }
+    Seq("q3_join", "q_window_rank", "q_array_explode").foreach { q =>
+      SparkEntry.queries.get(q).foreach(fn =>
+        try fn(spark, warmSf).foreach(_ => ())
+        catch { case scala.util.control.NonFatal(_) => () })
+    }
+    spark.catalog.clearCache()
+    Tables.lineitem(spark, sfDir).count()
   }
 }

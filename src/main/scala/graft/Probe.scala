@@ -17,11 +17,13 @@ import graft.plans.AsofJoinExec
 /** The measurement tool (not part of the bench contract): profiles registry
   * queries one at a time and prints one JSON line per query to stdout.
   *
-  * Per query, one untimed run comes first, so no query pays another's cold
-  * read. It is a `collect()` of the query's own frame, which gives the
-  * result rows and lets AQE finalize that frame's plan: the executed plan
-  * text and its join-operator histogram are read from it. Then [[Runs]]
-  * timed runs, each from a clean cache, split Bench's one number into
+  * Before the first query the session is warmed as in Bench
+  * ([[Bench.warmUp]]). Per query, one untimed run comes first, so no query
+  * pays another's cold read. It is a `collect()` of the query's own frame,
+  * which gives the result rows and lets AQE finalize that frame's plan: the
+  * executed plan text and its join-operator histogram are read from it.
+  * Then [[Runs]] timed runs, each from a clean cache, split Bench's one
+  * number into
   *   - build: the query function call (eager driver work inside a builder:
   *     ScaleGuard counts, memo fills, streaming drains),
   *   - plan: analysis + optimization + physical planning (`executedPlan`),
@@ -83,6 +85,7 @@ object Probe extends AdaptiveSparkPlanHelper {
       throw new IllegalArgumentException("SPARK_GRAFT_SF_DIR must name the data directory"))
     val spark = session
     try {
+      Bench.warmUp(spark, sfDir)
       val statuses = names.map { n =>
         val r = record(spark, n, sfDir)
         println(r.json)

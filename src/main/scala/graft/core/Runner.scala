@@ -4,6 +4,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.Path
 
 /** Batch pipeline runner with optional per-stage checkpoint + replay —
@@ -41,6 +42,11 @@ object Runner {
     * checkpoint was committed: an overwrite that failed part-way leaves a
     * directory without the writer's `_SUCCESS` marker, and replaying from
     * it would read an empty or partial stage.
+    *
+    * Each checkpoint is read back with the schema of the stage frame that
+    * wrote it, so the read-back starts no schema-inference job; Spark makes
+    * a given file-source schema nullable, which is what inference returns.
+    * The replay seed has no stage frame, so its read infers.
     */
   def runCheckpointed(
       spark: SparkSession,
@@ -64,15 +70,17 @@ object Runner {
     val runId = java.util.UUID.randomUUID().toString
     p.stages.drop(startIdx).foreach { st =>
       val out = s"$checkpointDir/${st.name}"
-      def materialize(): Unit = withRetries(st.retries, st.name) {
-        st(current).write.mode("overwrite").parquet(out)
+      def materialize(): StructType = withRetries(st.retries, st.name) {
+        val df = st(current)
+        df.write.mode("overwrite").parquet(out)
+        df.schema
       }
       // heartbeat/audit rows per stage (K4) when a run-log table is given
-      runLogPath match {
+      val schema = runLogPath match {
         case Some(path) => graft.ops.RunLog.tracked(spark, path, runId, st.name)(materialize())
         case None => materialize()
       }
-      current = spark.read.parquet(out)
+      current = spark.read.schema(schema).parquet(out)
     }
     current
   }

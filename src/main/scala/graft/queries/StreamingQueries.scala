@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.LongType
@@ -156,8 +157,7 @@ object StreamingQueries {
     * the point).
     */
   private val ckptManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
-  private val fsCkptManager =
-    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+  private val fsCkptManager = classOf[FileSystemBasedCheckpointFileManager].getName
 
   /** Set the throwaway-drain session confs (drain width + tmpfs-checkpoint
     * cost cuts), run `body`, restore every conf to its previous state. */

@@ -167,6 +167,66 @@ class PipelineSpec extends SparkSpec {
     assert(statuses.map(_._1).toSet == Set("calc", "filter_even"))
   }
 
+  /** Spark jobs `body` starts, counted by a listener; the bus is drained
+    * on both sides so no other action's events are counted. */
+  private def jobsIn(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.PlanBridge
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    PlanBridge.drainListeners(sc)
+    sc.addSparkListener(counter)
+    try body
+    finally { PlanBridge.drainListeners(sc); sc.removeSparkListener(counter) }
+    jobs.get()
+  }
+
+  test("bookkeeping starts no Spark job: run-log entries and checkpoint read-back") {
+    val dir = tmpDir("jobs")
+    assert(jobsIn(graft.ops.RunLog.tracked(spark, s"$dir/log0", "run0", "noop")(())) == 0)
+    var out: org.apache.spark.sql.DataFrame = null
+    val plain = jobsIn { out = Runner.runCheckpointed(spark, docsChain, s"$dir/plain") }
+    // one write job per stage, and no schema-inference job on read-back
+    assert(plain == docsChain.stages.size)
+    assert(jobsIn(out.queryExecution.analyzed) == 0)
+    assert(out.collect().length == 50)
+    val logged = jobsIn(Runner.runCheckpointed(spark, docsChain, s"$dir/logged",
+      runLogPath = Some(s"$dir/log")))
+    assert(logged == plain)
+    assert(spark.read.parquet(s"$dir/log").count() == 4)
+  }
+
+  test("checkpoint read-back keeps the stage schema and rows; replay gives the same rows") {
+    val dir = tmpDir("ckpt-types")
+    val p = Pipeline(Seeds.fromRange(spark, 40))
+      .stage("typed")(df => df.select(
+        col("idx"),
+        (col("idx") * lit(BigDecimal("1.25"))).cast("decimal(28,14)").as("dec"),
+        timestamp_seconds(col("idx") * 3601 + 1700000000L).as("ts"),
+        array(struct(col("idx").as("a"), concat(lit("s"), col("idx").cast("string")).as("b")))
+          .as("arr"),
+        map(lit("k"), col("idx") * 2).as("m"),
+        lit(7).as("seven")))
+      .stage("keep")(df => df.filter(col("idx") % 3 =!= 0)
+        .withColumn("dec2", (col("dec") * 2).cast("decimal(28,14)")))
+    assert(!p.plan.schema("seven").nullable && !p.plan.schema("idx").nullable)
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.sortBy(_.getAs[Long]("idx"))
+    val out = Runner.runCheckpointed(spark, p, dir)
+    val inferred = spark.read.parquet(s"$dir/keep")
+    assert(out.schema == inferred.schema)
+    val lazyRows = sorted(Runner.run(p))
+    assert(lazyRows.length == 26)
+    assert(sorted(out) == lazyRows)
+    assert(sorted(inferred) == lazyRows)
+    val replayed = Runner.runCheckpointed(spark, p, dir, replayFrom = Some("keep"))
+    assert(replayed.schema == inferred.schema)
+    assert(sorted(replayed) == lazyRows)
+  }
+
   test("lazy plan and checkpointed run produce identical results") {
     val dir = tmpDir("diff")
     val lazyRows = docsChain.plan.collect()

@@ -25,6 +25,49 @@ class OpsSpec extends SparkSpec {
     assert(failed.length == 1 && failed.head.getAs[String]("detail") == "nope")
   }
 
+  test("run log: Spark-appended and direct entries read as one table, timestamps exact") {
+    import spark.implicits._
+    val dir = tmpDir("runlog3")
+    val ts = java.sql.Timestamp.valueOf("2026-03-04 05:06:07.123456")
+    val old = RunLog.Entry("r0", "s", "succeeded", "", 12L, ts)
+    // how entries were appended before RunLog wrote its own files
+    def appendOld(path: String): Unit =
+      Seq(old).toDF().write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
+    appendOld(s"$dir/old")
+    appendOld(s"$dir/mixed")
+    RunLog.log(spark, s"$dir/mixed", old.copy(run_id = "r1"))
+    RunLog.log(spark, s"$dir/mixed", old.copy(run_id = "r2", detail = null, logged_at = null))
+    RunLog.log(spark, s"$dir/new", old)
+    val schema = spark.read.parquet(s"$dir/old").schema
+    assert(spark.read.parquet(s"$dir/mixed").schema == schema)
+    assert(spark.read.parquet(s"$dir/new").schema == schema)
+    val rows = spark.read.parquet(s"$dir/mixed").as[RunLog.Entry].collect().sortBy(_.run_id)
+    assert(rows.toSeq == Seq(old, old.copy(run_id = "r1"),
+      old.copy(run_id = "r2", detail = null, logged_at = null)))
+  }
+
+  test("run log: concurrent writers share one path and leave only whole entries") {
+    val path = tmpDir("runlog4") + "/log"
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (1 to 4).map { i =>
+      new Thread(() =>
+        try { go.await(); RunLog.tracked(spark, path, s"run$i", "stage")(i) }
+        catch { case t: Throwable => errors.add(t) })
+    }
+    threads.foreach(_.start())
+    go.countDown()
+    threads.foreach(_.join())
+    assert(errors.isEmpty, errors)
+    val rows = spark.read.parquet(path).collect()
+    assert(rows.length == 8)
+    assert(rows.map(r => (r.getAs[String]("run_id"), r.getAs[String]("status"))).toSet ==
+      (1 to 4).flatMap(i => Seq(s"run$i" -> "started", s"run$i" -> "succeeded")).toSet)
+    val names = new java.io.File(path).list().toSeq
+    assert(!names.exists(_.contains("_tmp-")), names)
+    assert(names.count(_.endsWith(".parquet")) == 8, names)
+  }
+
   test("throttledMap preserves values and enforces the per-partition rate") {
     import spark.implicits._
     val ds = spark.range(10).map(_.toLong).repartition(1)
