@@ -73,18 +73,19 @@ object AnnSampleFit {
       a
     }
 
-    val truth = Ann.bruteTopK(queries, corpus, k = 5)
-      .select(col("q_id"), col("neighbor")).cache()
-    val tot = truth.count()
-    def recall(assigned: org.apache.spark.sql.DataFrame,
-               cents: org.apache.spark.sql.DataFrame): Double =
-      Ann.ivfTopK(spark, queries, assigned, k = 5, nprobe = nprobe,
-        cellCol = "cell", storedCentroids = Some(cents))
-        .select(col("q_id"), col("neighbor"))
-        .join(truth, Seq("q_id", "neighbor"), "left_semi")
-        .count().toDouble / tot
-    val rFull = recall(fullModel.assigned, fullModel.centroids)
-    val rSample = recall(sampleAssigned, sampleModel.centroids)
+    val (rFull, rSample) = graft.ops.Lineage.pinned(Ann.bruteTopK(queries, corpus, k = 5)
+        .select(col("q_id"), col("neighbor"))) { truth =>
+      val tot = truth.count()
+      def recall(assigned: org.apache.spark.sql.DataFrame,
+                 cents: org.apache.spark.sql.DataFrame): Double =
+        Ann.ivfTopK(spark, queries, assigned, k = 5, nprobe = nprobe,
+          cellCol = "cell", storedCentroids = Some(cents))
+          .select(col("q_id"), col("neighbor"))
+          .join(truth, Seq("q_id", "neighbor"), "left_semi")
+          .count().toDouble / tot
+      (recall(fullModel.assigned, fullModel.centroids),
+        recall(sampleAssigned, sampleModel.centroids))
+    }
     // cell balance context: on unclustered data Lloyd cells can collapse
     // (empty cells drop), which dominates what recall@nprobe means — report
     // the surviving cell count and the biggest cell's corpus share so the

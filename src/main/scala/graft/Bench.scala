@@ -53,10 +53,12 @@ object Bench {
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      // Some query builders cache intermediate tables (LSH signatures etc.);
-      // left in place they accumulate across the 69-query sweep and the GC
-      // pressure lands on whichever query runs when the heap fills (r2: one
-      // 0.7s query measured at 24.6s). Each query is timed from a clean cache.
+      // Each query is timed from a clean cache. No query leaves a
+      // CacheManager entry behind (graft.ops.Lineage; RegistrySpec checks
+      // every query), so the clearCache is a guard: a leaked entry would
+      // accumulate across the sweep and its GC pressure would land on
+      // whichever query runs when the heap fills (r2: one 0.7s query
+      // measured at 24.6s).
       def once(): Double = {
         spark.catalog.clearCache()
         // Cross-query memos (the unigram lattice) are cleared per SAMPLE,

@@ -112,8 +112,9 @@ object Probe extends AdaptiveSparkPlanHelper {
   /** Profile one registry query on `spark` (see the object doc). */
   def record(spark: SparkSession, name: String, sfDir: String): Record = {
     val fn = SparkEntry.queries(name)
-    // Query-local caches and the cross-query unigram memo are cleared per
-    // run, as in Bench, so no run is served from a previous one.
+    // The cross-query unigram memo is cleared per run, as in Bench, so no
+    // run is served from a previous one; clearCache is a guard (no query
+    // leaves a CacheManager entry behind).
     def clean(): Unit = {
       spark.catalog.clearCache()
       graft.queries.LearnQueries.clearMemo()

@@ -20,12 +20,11 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Release query-local persist()s (line-dedup segments, heavy-hitter
-      // exact counts, image hashes, …) between queries — same discipline
-      // as Bench — so a full-registry sweep holds cached storage flat
-      // instead of leaning on LRU eviction. localCheckpoint/checkpoint
-      // blocks (Lineage.truncate, the memoized unigram lattice) live at
-      // the RDD layer and are unaffected.
+      // A guard, as in Bench: no query leaves a CacheManager entry behind
+      // (graft.ops.Lineage; RegistrySpec checks every query), so this
+      // only matters if one ever does. Truncated blocks (Lineage.truncate,
+      // the memoized unigram lattice) live at the RDD layer and are
+      // unaffected.
       spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

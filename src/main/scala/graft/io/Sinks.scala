@@ -51,11 +51,11 @@ object Sinks {
           .select(keyCols.map(org.apache.spark.sql.functions.col): _*).distinct()
         df.join(existing, keyCols, "left_anti")
       } else df
-    val toWrite = fresh.cache()
-    val n = toWrite.count()
-    if (n > 0) toWrite.write.mode(SaveMode.Append).parquet(path)
-    toWrite.unpersist()
-    n
+    graft.ops.Lineage.pinned(fresh) { toWrite =>
+      val n = toWrite.count()
+      if (n > 0) toWrite.write.mode(SaveMode.Append).parquet(path)
+      n
+    }
   }
 
   /** Partitioned append for scale: hive-style partition columns give

@@ -231,10 +231,10 @@ object Ann {
     * re-fit-on-drift path ([[recallDrift]] measures when) and the analog of
     * the reference's replace-all ETLDataset.update
     * (/root/reference/bert/etl/__init__.py:133-164), which rewrites the
-    * whole dataset object rather than mutating in place. Discipline is
-    * [[graft.ops.Caches.swap]] applied to paths: the new generation is
-    * fully written BEFORE it becomes current, and the old generation is
-    * retained (for in-flight readers / rollback) until [[pruneIndexVersions]].
+    * whole dataset object rather than mutating in place. The new
+    * generation is fully written BEFORE it becomes current, and the old
+    * generation is retained (for in-flight readers / rollback) until
+    * [[pruneIndexVersions]].
     *
     * Mechanics: the model lands under `path/v<N+1>/` and a `_complete`
     * marker is created LAST; [[currentRoot]] resolves to the highest
@@ -607,10 +607,6 @@ object Ann {
                   cellCol: String = "cell", exactArith: Boolean = false): RecallDrift = {
     val stored = readIndex(spark, path)
     val corpus = stored.assigned.drop(cellCol)
-    // evaluated three times below (one total + two semi-joins): cache for
-    // the probe's duration, released before returning (Caches discipline)
-    val truth = bruteTopK(queries, corpus, k, qIdCol, idCol, embCol)
-      .select(col(qIdCol), col("neighbor")).cache()
     val servedStored = ivfTopK(spark, queries, stored.assigned, k, nprobe,
       qIdCol, idCol, embCol, cellCol, exactArith,
       storedCentroids = Some(stored.centroids))
@@ -625,14 +621,18 @@ object Ann {
       assign(corpus, refit.centroids, embCol, cellCol, exactArith),
       k, nprobe, qIdCol, idCol, embCol, cellCol, exactArith,
       storedCentroids = Some(refit.centroids))
-    def recall(served: DataFrame): Double = {
-      val tot = truth.count()
-      if (tot == 0L) 1.0
-      else served.select(col(qIdCol), col("neighbor"))
-        .join(truth, Seq(qIdCol, "neighbor"), "left_semi").count().toDouble / tot
+    // truth is read three times (one total + two semi-joins): pinned for
+    // the two recall probes only
+    Lineage.pinned(bruteTopK(queries, corpus, k, qIdCol, idCol, embCol)
+        .select(col(qIdCol), col("neighbor"))) { truth =>
+      def recall(served: DataFrame): Double = {
+        val tot = truth.count()
+        if (tot == 0L) 1.0
+        else served.select(col(qIdCol), col("neighbor"))
+          .join(truth, Seq(qIdCol, "neighbor"), "left_semi").count().toDouble / tot
+      }
+      RecallDrift(recall(servedStored), recall(servedRefit))
     }
-    try RecallDrift(recall(servedStored), recall(servedRefit))
-    finally truth.unpersist(blocking = false)
   }
 
   /** Nearest-trained-cell for every corpus row — the second half of the

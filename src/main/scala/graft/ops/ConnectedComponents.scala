@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   * 100 TB posture:
   *  - each round is two equi-joins + a hash aggregate, all key-parallel;
   *  - the edge table is shuffled ONCE: it is repartitioned by the join key
-  *    and cached, so every round's join reuses its layout and only the
-  *    (node, label) table — one row per node — moves;
+  *    and pinned for the loop ([[Lineage.pinned]]), so every round's join
+  *    reuses its layout and only the (node, label) table — one row per
+  *    node — moves;
   *  - lineage is truncated each round via [[Lineage.truncate]]:
   *    localCheckpoint by default (cheapest; right at local[n]), reliable
   *    checkpoint() to `spark.graft.checkpointDir` when the session sets
@@ -65,64 +66,67 @@ object ConnectedComponents {
     val nEdges = 2 * e.count()
     val maxP = edges.sparkSession.sessionState.conf.numShufflePartitions
     val p = math.max(1, math.min(maxP.toLong, nEdges / 50000 + 1)).toInt
-    val sym = e
+    // the symmetric edge table is read by the seed aggregate and by every
+    // round; each round ends in an eager truncate, so the final labels
+    // hold no reference to it and it is released when the loop ends
+    val symEdges = e
       .union(e.select(col("e_dst").as("e_src"), col("e_src").as("e_dst")))
       .filter(col("e_src") =!= col("e_dst"))
       .distinct()
       .repartition(p, col("e_dst"))
-      .cache()
-
-    // node set from the UNFILTERED edge list, so a node appearing only in
-    // self-loops still gets a (singleton) component instead of vanishing.
-    // Labels are SEEDED with least(self, min neighbor id) rather than self
-    // (r15 optimization, guide §1.2): at init every neighbor's label IS its
-    // id, so this folds the first neighbor-propagation step into the seed
-    // join for the cost of one aggregate over the cached edge table —
-    // shallow graphs (the near-dup norm: stars/cliques around one min node)
-    // then converge one full round (two joins + checkpoint + scan) earlier.
-    // The invariant the pointer jump relies on is preserved: the seed label
-    // is the id of a node in the same component, and the fixpoint (min id
-    // per component) is init-independent for any in-component seed.
-    val nbr0 = sym.groupBy(col("e_dst")).agg(min(col("e_src")).as("nmin"))
-    var labels = Lineage.truncate(
-      e.select(col("e_src").as("node"))
-        .union(e.select(col("e_dst").as("node")))
-        .distinct()
-        .join(nbr0, col("node") === col("e_dst"), "left")
-        .select(col("node"),
-          least(col("node"), coalesce(col("nmin"), col("node"))).as("lbl")))
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val nbrMin = sym.join(labels, col("e_dst") === col("node"))
-        .groupBy(col("e_src"))
-        .agg(min(col("lbl")).as("nbr_lbl"))
-      val cand = labels.join(nbrMin, col("node") === col("e_src"), "left")
-        .select(col("node"), col("lbl").as("old_lbl"),
-          least(col("lbl"), coalesce(col("nbr_lbl"), col("lbl"))).as("lbl"))
-      // pointer jump: also adopt the label OF my label. A label is always
-      // the id of a node in my component, so the lookup stays in-component
-      // and monotonically nonincreasing — this is what turns O(diameter)
-      // into O(log diameter). The old label rides along so convergence is
-      // a filter on the checkpointed result, not another join per round.
-      // (r15: a double jump per round was measured on the deep semdedup
-      // cosine graphs — round count did NOT drop, per-round cost rose;
-      // reverted.)
-      val next = Lineage.truncate(cand.as("c")
-        .join(cand.select(col("node").as("l_node"), col("lbl").as("l_lbl")),
-          col("c.lbl") === col("l_node"), "left")
-        .select(col("node"),
-          least(col("c.lbl"), coalesce(col("l_lbl"), col("c.lbl"))).as("lbl"),
-          (least(col("c.lbl"), coalesce(col("l_lbl"), col("c.lbl")))
-            =!= col("old_lbl")).as("__chg")))
-      converged = next.filter(col("__chg")).head(1).isEmpty
-      labels = next.drop("__chg")
-      iter += 1
+    val (labels, iter) = Lineage.pinned(symEdges) { sym =>
+      // node set from the UNFILTERED edge list, so a node appearing only in
+      // self-loops still gets a (singleton) component instead of vanishing.
+      // Labels are SEEDED with least(self, min neighbor id) rather than self
+      // (r15 optimization, guide §1.2): at init every neighbor's label IS its
+      // id, so this folds the first neighbor-propagation step into the seed
+      // join for the cost of one aggregate over the pinned edge table —
+      // shallow graphs (the near-dup norm: stars/cliques around one min node)
+      // then converge one full round (two joins + checkpoint + scan) earlier.
+      // The invariant the pointer jump relies on is preserved: the seed label
+      // is the id of a node in the same component, and the fixpoint (min id
+      // per component) is init-independent for any in-component seed.
+      val nbr0 = sym.groupBy(col("e_dst")).agg(min(col("e_src")).as("nmin"))
+      var labels = Lineage.truncate(
+        e.select(col("e_src").as("node"))
+          .union(e.select(col("e_dst").as("node")))
+          .distinct()
+          .join(nbr0, col("node") === col("e_dst"), "left")
+          .select(col("node"),
+            least(col("node"), coalesce(col("nmin"), col("node"))).as("lbl")))
+      var iter = 0
+      var converged = false
+      while (!converged && iter < maxIter) {
+        val nbrMin = sym.join(labels, col("e_dst") === col("node"))
+          .groupBy(col("e_src"))
+          .agg(min(col("lbl")).as("nbr_lbl"))
+        val cand = labels.join(nbrMin, col("node") === col("e_src"), "left")
+          .select(col("node"), col("lbl").as("old_lbl"),
+            least(col("lbl"), coalesce(col("nbr_lbl"), col("lbl"))).as("lbl"))
+        // pointer jump: also adopt the label OF my label. A label is always
+        // the id of a node in my component, so the lookup stays in-component
+        // and monotonically nonincreasing — this is what turns O(diameter)
+        // into O(log diameter). The old label rides along so convergence is
+        // a filter on the checkpointed result, not another join per round.
+        // (r15: a double jump per round was measured on the deep semdedup
+        // cosine graphs — round count did NOT drop, per-round cost rose;
+        // reverted.)
+        val next = Lineage.truncate(cand.as("c")
+          .join(cand.select(col("node").as("l_node"), col("lbl").as("l_lbl")),
+            col("c.lbl") === col("l_node"), "left")
+          .select(col("node"),
+            least(col("c.lbl"), coalesce(col("l_lbl"), col("c.lbl"))).as("lbl"),
+            (least(col("c.lbl"), coalesce(col("l_lbl"), col("c.lbl")))
+              =!= col("old_lbl")).as("__chg")))
+        converged = next.filter(col("__chg")).head(1).isEmpty
+        labels = next.drop("__chg")
+        iter += 1
+      }
+      if (!converged)
+        throw new IllegalStateException(
+          s"connected components did not converge in $maxIter rounds")
+      (labels, iter)
     }
-    sym.unpersist()
-    if (!converged)
-      throw new IllegalStateException(
-        s"connected components did not converge in $maxIter rounds")
     (labels.withColumnRenamed("lbl", "component"), iter)
   }
 }

@@ -51,8 +51,8 @@ object PrefixFilterJoin {
     require(tNum > 0 && tDen > 0 && tNum <= tDen, s"threshold $tNum/$tDen not in (0,1]")
     val id = col(idCol); val tok = col(tokCol)
     // the postings feed four consumers (sizes, df, ranking, verify×2);
-    // without a cache each re-runs the upstream tokenization/shingling
-    val p = postings.cache()
+    // without a pin each re-runs the upstream tokenization/shingling
+    val p = Lineage.truncate(postings)
     val sizes = p.groupBy(id).agg(count(lit(1)).as("__n"))
     val dfTab = p.groupBy(tok).agg(count(lit(1)).as("__df"))
     val ranked = p

@@ -82,10 +82,7 @@ object PrefixSum {
             else {
               val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
               val byEst = (est / (32L << 20)) + 1 // ~32 MB per partition
-              val r = if (byEst >= BigInt(maxP)) maxP else math.max(1, byEst.toInt)
-              if (sys.env.contains("GRAFT_PS_DEBUG"))
-                System.err.println(s"[prefixsum] est=$est n=$r")
-              r
+              if (byEst >= BigInt(maxP)) maxP else math.max(1, byEst.toInt)
             }
     // materialize ONCE (eager checkpoint via Lineage.truncate): BOTH
     // branches below (local scan, per-partition totals) read `ranged`, and
@@ -125,8 +122,6 @@ object PrefixSum {
       case Some(bytes) =>
         val ideal = math.max(1L, math.min(maxP.toLong, bytes / (32L << 20) + 1)).toInt
         val tooNarrow = n < maxP && n.toLong * 4 <= ideal
-        if (sys.env.contains("GRAFT_PS_DEBUG"))
-          System.err.println(s"[prefixsum] actual=$bytes ideal=$ideal n=$n resize=$tooNarrow")
         if (tooNarrow) mkRanged(ideal, ranged0.drop("__ps_pid")) else ranged0
       case None => ranged0
     }

@@ -476,10 +476,12 @@ object AnalyticsQueries {
       .select(expr("explode(transform(sequence(0, size(tk)-2), i -> struct(tk[i] AS w1, tk[i+1] AS w2)))").as("pr"))
       .select(col("pr.w1").as("w1"), col("pr.w2").as("w2"))
     val edges = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
-    val out = edges.groupBy(col("w1")).agg(sum(col("c")).cast("bigint").as("c1")).cache()
-    val e = edges.join(out, "w1")
+    // out and e are read by every round: truncated once, before the loop
+    val out = graft.ops.Lineage.truncate(
+      edges.groupBy(col("w1")).agg(sum(col("c")).cast("bigint").as("c1")))
+    val e = graft.ops.Lineage.truncate(edges.join(out, "w1")
       .select(col("w1"), col("w2"),
-        (col("c").cast("double") / col("c1").cast("double")).as("p")).cache()
+        (col("c").cast("double") / col("c1").cast("double")).as("p")))
     // The DANGLING SET IS STATIC (a node dangles iff it never appears as a
     // bigram source), so resolve it ONCE into a boolean column instead of
     // re-deriving it with a per-round anti-join (r16, guide §1.2 /
@@ -489,10 +491,10 @@ object AnalyticsQueries {
     // ranks frame — no join, no broadcast build. `out.w1` is unique (it
     // is a groupBy key), so left-join + IS NOT NULL is row-for-row the
     // old left_anti semantics, and the decimal dangling sum is unchanged.
-    val nodes = tkDf.select(explode(col("tk")).as("token"))
+    val nodes = graft.ops.Lineage.truncate(tkDf.select(explode(col("tk")).as("token"))
       .filter(col("token") =!= "").distinct()
       .join(out.select(col("w1")), col("token") === col("w1"), "left")
-      .select(col("token"), col("w1").isNotNull.as("__has_out")).cache()
+      .select(col("token"), col("w1").isNotNull.as("__has_out")))
     val nN = nodes.count().toDouble
     var ranks = nodes.select(col("token"), (lit(1.0) / lit(nN)).as("rank"), col("__has_out"))
     for (_ <- 1 to 5) {
@@ -549,8 +551,8 @@ object AnalyticsQueries {
       .groupBy((col("o_custkey") * 2).as("cu"), (col("l_suppkey") * 2 + 1).as("su"))
       .agg(count(lit(1)).as("c")).filter(col("c") >= 3)
       .select(col("cu"), col("su"))
-    val edges = pairs.select(col("cu").as("src"), col("su").as("dst"))
-      .union(pairs.select(col("su").as("src"), col("cu").as("dst"))).cache()
+    val edges = graft.ops.Lineage.truncate(pairs.select(col("cu").as("src"), col("su").as("dst"))
+      .union(pairs.select(col("su").as("src"), col("cu").as("dst"))))
     var labels = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     for (_ <- 1 to 3) {
@@ -605,11 +607,13 @@ object AnalyticsQueries {
     * total rides one broadcast row.
     */
   def qMarketBasket(s: SparkSession, dir: String): DataFrame = {
-    val items = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_partkey"))
-      .join(Tables.part(s, dir).select(col("p_partkey"), col("p_brand")),
-        col("l_partkey") === col("p_partkey"))
-      .select(col("l_orderkey").as("bk"), col("p_brand").as("item"))
-      .distinct().cache()
+    // truncated: read four times by the returned plan
+    val items = graft.ops.Lineage.truncate(
+      Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_partkey"))
+        .join(Tables.part(s, dir).select(col("p_partkey"), col("p_brand")),
+          col("l_partkey") === col("p_partkey"))
+        .select(col("l_orderkey").as("bk"), col("p_brand").as("item"))
+        .distinct())
     val n = items.agg(countDistinct(col("bk")).as("n"))
     val cnt = items.groupBy(col("item")).agg(count(lit(1)).as("c"))
     val pairs = items.as("a")
@@ -664,12 +668,14 @@ object AnalyticsQueries {
     * qLabelProp/qPagerank shape.
     */
   def qHits(s: SparkSession, dir: String): DataFrame = {
-    val edges = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
-      .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_custkey").as("cu"), col("l_suppkey").as("su"))
-      .agg(count(lit(1)).as("c")).filter(col("c") >= 3)
-      .select(col("cu"), col("su")).cache()
+    // truncated: every round's join reads edges
+    val edges = graft.ops.Lineage.truncate(
+      Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
+        .join(Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey")),
+          col("l_orderkey") === col("o_orderkey"))
+        .groupBy(col("o_custkey").as("cu"), col("l_suppkey").as("su"))
+        .agg(count(lit(1)).as("c")).filter(col("c") >= 3)
+        .select(col("cu"), col("su")))
     val h1 = edges.groupBy(col("cu")).agg(count(lit(1)).as("h1"))
     val a1 = edges.join(h1, "cu")
       .groupBy(col("su")).agg(sum(col("h1")).cast("bigint").as("a1"))
@@ -1801,7 +1807,10 @@ object AnalyticsQueries {
       explode(sequence(
         (greatest(col("len") - 4, lit(0)) / bandW).cast("int"),
         ((col("len") + 4) / bandW).cast("int"))))
-    val pairs = probe.as("a").join(build.as("b"),
+    // the scored pair frame is read by ConnectedComponents and by the edge
+    // census: truncated once, so the blocked join and three string kernels
+    // run once
+    val pairs = graft.ops.Lineage.truncate(probe.as("a").join(build.as("b"),
         col("a.p_brand") === col("b.p_brand") &&
           col("a.band") === col("b.band") &&
           col("a.p_partkey") < col("b.p_partkey") &&
@@ -1816,14 +1825,7 @@ object AnalyticsQueries {
           when(col("dl") <= 4, 1).otherwise(0) +
           when(col("jw") >= 0.90, 1).otherwise(0))
       .filter(col("votes") >= 2)
-      .select(col("brand"), col("ka"), col("kb"))
-      // materialize the scored pair frame ONCE: ConnectedComponents and
-      // the edge census both reference it, and the blocked join + three
-      // string kernels would otherwise execute per reference. persist (not
-      // localCheckpoint): construction stays lazy and lineage is kept, so on
-      // a real cluster an executor loss recomputes the partition instead of
-      // failing the query on a lost unreplicated block.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("brand"), col("ka"), col("kb")))
     val comp = graft.ops.ConnectedComponents.run(
       pairs.select(col("ka"), col("kb")), "ka", "kb")
     val labeled = p.select(col("p_brand").as("brand"), col("p_partkey").as("node"))
@@ -2037,10 +2039,10 @@ object AnalyticsQueries {
         explode(expr(s"sequence(0, ${depth - 1})")).as("j"))
       .withColumn("b", pmod(hash(col("user_id"), col("j")), lit(W)))
     // the global sketch feeds BOTH the merge-linearity audit and the
-    // top-k probe join; persist the 4096-cell frame so its (depth × rows)
+    // top-k probe join; truncate the 4096-cell frame so its (depth × rows)
     // explode+hash build runs once (the sketch is the thing you'd store)
-    val global = rows.groupBy(col("j"), col("b")).agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val global = graft.ops.Lineage.truncate(
+      rows.groupBy(col("j"), col("b")).agg(count(lit(1)).as("c")))
     val merged = rows.groupBy(col("event_type"), col("j"), col("b"))
       .agg(count(lit(1)).as("pc"))
       .groupBy(col("j"), col("b")).agg(sum(col("pc")).as("mc"))

@@ -691,18 +691,15 @@ object EvalQueries {
         .groupBy(col("cand_id"))
         .agg(sum(least(col("cc"), col("rc"))).cast("bigint").as(s"ov_$gramCol"))
     }
-    val grams = pairs.select(col("cand_id"),
+    // the pair frame feeds three consumers (itself + two clipped-overlap
+    // passes): truncated so the corpus scan + pair join run once
+    val grams = graft.ops.Lineage.truncate(pairs.select(col("cand_id"),
       col("ctk").as("c_g1"), col("rtk").as("r_g1"),
       bigrams("ctk").as("c_g2"), bigrams("rtk").as("r_g2"),
       size(col("ctk")).cast("bigint").as("n1_cand"),
       size(col("rtk")).cast("bigint").as("n1_ref"),
       (size(col("ctk")) - 1).cast("bigint").as("n2_cand"),
-      (size(col("rtk")) - 1).cast("bigint").as("n2_ref"))
-      // the pair frame feeds three consumers (itself + two clipped-overlap
-      // passes); persist so the corpus scan + pair join run once, with
-      // lineage kept for executor-loss recovery (the qEntityResolution
-      // posture)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      (size(col("rtk")) - 1).cast("bigint").as("n2_ref")))
     grams
       .join(clipped(grams, "g1"), Seq("cand_id"), "left")
       .join(clipped(grams, "g2"), Seq("cand_id"), "left")

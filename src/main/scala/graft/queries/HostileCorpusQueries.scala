@@ -122,12 +122,10 @@ object HostileCorpusQueries {
     */
   def qHostileCorpusDedup(s: SparkSession, dir: String): DataFrame = {
     val docs = hostileUnion(s, dir, 30)
-    // ONE cached shingle table feeds both the banding pipeline and the
+    // ONE truncated shingle table feeds both the banding pipeline and the
     // per-doc diag — shingling the 10 MiB doc is this gate's deliberate
-    // stressor and must be paid once, not once per consumer. Caches.swap
-    // bounds the persist to one generation across builder re-invocations.
-    val sh = graft.ops.Caches.swap("hostile_corpus_dedup:shingles",
-      SimilarityQueries.shinglesOf(docs))
+    // stressor and must be paid once, not once per consumer.
+    val sh = graft.ops.Lineage.truncate(SimilarityQueries.shinglesOf(docs))
     val pairs = SimilarityQueries.minhashPairsOfShingles(sh)
       .select(lit("pair").as("probe"), col("doc_a").as("a"), col("doc_b").as("b"),
         r6(col("jaccard")).as("v"))
@@ -724,8 +722,8 @@ object HostileCorpusQueries {
     val rawState = root.resolve("raw").toString
     DedupState.commit(s, batch1, nfcState, Seq("text"), nfc = true)
     DedupState.commit(s, batch1, rawState, Seq("text"))
-    // cached: six probe aggregates below share it; one generation resident
-    val freshNfc = graft.ops.Caches.swap("dedup_nfc:fresh",
+    // truncated: four probe aggregates below share it
+    val freshNfc = graft.ops.Lineage.truncate(
       DedupState.filterNew(s, batch2, nfcState, Seq("text"), nfc = true))
     val freshRaw = DedupState.filterNew(s, batch2, rawState, Seq("text"))
     def probe(name: String, df: DataFrame): DataFrame =

@@ -57,8 +57,7 @@ object LearnQueries {
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .withColumn("sym", symCol)
       .select(col("freq"), col("sym"))
-      .persist()
-    try {
+    graft.ops.Lineage.pinned(words) { words =>
       var cur = words.select(col("freq"), col("sym"))
       val out = Seq.newBuilder[(Int, String, String, String, Long)]
       for (it <- 1 to 3) {
@@ -84,7 +83,7 @@ object LearnQueries {
       }
       s.createDataFrame(out.result())
         .toDF("iter", "lhs", "rhs", "merged", "pair_count")
-    } finally words.unpersist()
+    }
   }
 
   /** The 3-round merge-learning CTE chain, shared verbatim between the
@@ -262,12 +261,11 @@ object LearnQueries {
     */
   def qPcaPower(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    // cache: the symmetric expansion references the Gram aggregate from
-    // two union branches and each mat-vec joins it again — without the
-    // cache, exchange-reuse-off regimes would re-run the CORPUS pass per
-    // reference (the one cost that matters at scale). The cached table is
-    // d(d+1)/2 rows.
-    val g = qGramMatrix(s, dir).cache()
+    // truncated: the symmetric expansion references the Gram aggregate
+    // from two union branches and each mat-vec joins it again — without
+    // the pin every reference re-runs the CORPUS pass (the one cost that
+    // matters at scale). The table is d(d+1)/2 rows.
+    val g = graft.ops.Lineage.truncate(qGramMatrix(s, dir))
     val full = g.union(
       g.filter(col("i") < col("j")).select(col("j").as("i"), col("i").as("j"), col("gram")))
     def matVec(v: DataFrame, vCol: String, outCol: String): DataFrame =
@@ -391,9 +389,8 @@ object LearnQueries {
   def qCoreset(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val k = 8
-    val e = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("embedding")).persist()
-    try {
+    graft.ops.Lineage.pinned(Tables.embeddings(s, dir)
+        .select(col("vec_id"), col("embedding"))) { e =>
       // INCREMENTAL farthest-point traversal (r15 optimization, guide §1.2
       // "the distributed algorithm"): min-dist-to-selection is maintained as
       // a running column — round t folds ONLY the newest center in with
@@ -418,33 +415,29 @@ object LearnQueries {
       // discipline — never a data-path collect)
       def withCe(df: DataFrame, ce: Seq[Float]): DataFrame =
         df.withColumn("ce", typedLit(ce))
-      var md = withCe(e, seedEmb)
+      // round t pins md_t; md_{t+1} materializes at the next round's
+      // collect by reading md_t's blocks, so the pins nest: the k
+      // corpus-sized generations are released together when the last
+      // round returns (same jobs as one pin per round, k× the storage)
+      def round(md: DataFrame, t: Int): java.math.BigDecimal =
+        graft.ops.Lineage.pinned(md) { md =>
+          if (t == k) md.agg(max(col("md")).as("md")).collect()(0).getDecimal(0)
+          else {
+            val row = md.filter(!col("vec_id").isin(sel: _*))
+              .orderBy(col("md").desc, col("vec_id"))
+              .select(col("vec_id"), col("md"), col("embedding"))
+              .limit(1).collect()(0)
+            val id = row.getLong(0)
+            sel = sel :+ id
+            picks += org.apache.spark.sql.Row(t, java.lang.Long.valueOf(id), row.getDecimal(1))
+            round(withCe(md, row.getSeq[Float](2))
+              .select(col("vec_id"), col("embedding"),
+                least(col("md"), expr("decimal_sqdist(embedding, ce)")).as("md")), t + 1)
+          }
+        }
+      val cov = round(withCe(e, seedEmb)
         .select(col("vec_id"), col("embedding"),
-          expr("decimal_sqdist(embedding, ce)").as("md"))
-        .persist()
-      var prev: DataFrame = null
-      for (t <- 1 until k) {
-        val row = md.filter(!col("vec_id").isin(sel: _*))
-          .orderBy(col("md").desc, col("vec_id"))
-          .select(col("vec_id"), col("md"), col("embedding"))
-          .limit(1).collect()(0)
-        val id = row.getLong(0)
-        sel = sel :+ id
-        picks += org.apache.spark.sql.Row(t, java.lang.Long.valueOf(id), row.getDecimal(1))
-        val ce = row.getSeq[Float](2)
-        val next = withCe(md, ce)
-          .select(col("vec_id"), col("embedding"),
-            least(col("md"), expr("decimal_sqdist(embedding, ce)")).as("md"))
-          .persist()
-        // one-generation unpersist lag: `next` materializes (at the NEXT
-        // round's action) by reading this round's cached blocks
-        if (prev != null) { prev.unpersist(); () }
-        prev = md
-        md = next
-      }
-      val cov = md.agg(max(col("md")).as("md")).collect()(0).getDecimal(0)
-      if (prev != null) { prev.unpersist(); () }
-      md.unpersist()
+          expr("decimal_sqdist(embedding, ce)").as("md")), 1)
       picks += org.apache.spark.sql.Row(k, null, cov)
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("ord",
@@ -459,7 +452,7 @@ object LearnQueries {
           scala.jdk.CollectionConverters.SeqHasAsJava(picks.result()).asJava), schema)
         .select(col("ord"), col("vec_id"),
           r6(col("md").cast("double")).as("radius_sq"))
-    } finally { e.unpersist(); () }
+    }
   }
 
   val qCoresetSql: String = {
@@ -533,7 +526,7 @@ object LearnQueries {
     * — q_unigram_refit after q_unigram_lm — would rebuild and re-cache
     * the whole pipeline for nothing. Both returned frames are vocab-sized
     * and lineage-truncated, and the corpus-sized intermediates (wf,
-    * edges) are unpersisted before return, so the memo holds kilobytes,
+    * edges) are released before return, so the memo holds kilobytes,
     * not the lattice.
     */
   private val unigramMemo =
@@ -596,9 +589,13 @@ object LearnQueries {
     */
   private[queries] def unigramFromWf(wf0: DataFrame, minCount: Long)
       : (DataFrame, DataFrame) = {
+    // wf (vocab-sized) feeds candidates, the lattice and the final join;
+    // both outputs are truncated before the pin is released
+    graft.ops.Lineage.pinned(wf0)(wf => unigramLattice(wf, minCount))
+  }
+
+  private def unigramLattice(wf: DataFrame, minCount: Long): (DataFrame, DataFrame) = {
     val maxLen = 12
-    val wf = wf0
-      .persist() // vocab-sized; feeds candidates, the lattice, and the final join
     val occ = wf.select(col("cnt"), explode(expr(
         """flatten(transform(sequence(1, length(w)), i ->
           |  transform(sequence(1, least(4, length(w) - i + 1)),
@@ -643,15 +640,12 @@ object LearnQueries {
         |  acc -> element_at(acc, length(w) + 1))""".stripMargin).as("b"))
       .filter(col("b").isNotNull)
       .select(col("w"), col("b.sc").as("sc"), col("b.path").as("path"))
-    // materialize the two vocab-sized outputs while wf is still cached,
-    // then release the cached input: nothing downstream re-reads the
-    // corpus, and a full-registry sweep no longer holds the lattice
-    // pipeline's cache for the session lifetime (r10 verdict item).
+    // materialize the two vocab-sized outputs while wf is still pinned:
+    // nothing downstream re-reads the corpus, and a full-registry sweep
+    // does not hold the lattice pipeline's input for the session lifetime
     val segM = graft.ops.Lineage.truncate(wf.join(best, Seq("w"))
       .select(col("w"), col("cnt"), expr("substring(path, 2)").as("seg"), col("sc")))
-    val piecesM = graft.ops.Lineage.truncate(pieces)
-    wf.unpersist()
-    (piecesM, segM)
+    (graft.ops.Lineage.truncate(pieces), segM)
   }
 
   def qUnigramLm(s: SparkSession, dir: String): DataFrame = {

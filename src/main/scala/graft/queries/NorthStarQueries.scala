@@ -712,7 +712,8 @@ object NorthStarQueries {
         Multimodal.Media(id, "image", Multimodal.rgbToPng(16, 16, rgb),
           16, 16, 0, 1)
       }
-    val hashed = media.mapPartitions { it =>
+    // truncated: feeds bands + both pair-side joins of the returned plan
+    val hashed = graft.ops.Lineage.truncate(media.mapPartitions { it =>
       it.map { m =>
         val (w, h, rgb) = Multimodal.decodeImageRgb(m.bytes)
         require(w == 16 && h == 16, s"unexpected decode dims ${w}x$h")
@@ -733,9 +734,7 @@ object NorthStarQueries {
         }
         (m.media_id, hi, lo)
       }
-      // released by the harness's per-query clearCache (Bench/Verify):
-      // feeds bands + both pair-side joins of the returned plan
-    }.toDF("media_id", "hi", "lo").persist()
+    }.toDF("media_id", "hi", "lo"))
     val bands = hashed.select(col("media_id"),
       posexplode(array(
         expr("hi div 65536"), expr("hi % 65536"),

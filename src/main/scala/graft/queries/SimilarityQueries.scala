@@ -85,24 +85,28 @@ object SimilarityQueries {
     * the production banding code, not a copy.
     */
   private[queries] def minhashPairs(docs: DataFrame, nfc: Boolean = false): DataFrame =
-    // cache: shingles feed three consumers (signatures, intersection
+    // pinned: shingles feed three consumers (signatures, intersection
     // counts ×2, sizes ×2) — materialize once instead of re-exploding the
     // corpus per consumer. At corpus scale this is the shingle TABLE.
-    minhashPairsOfShingles(shinglesOf(docs, nfc).cache())
+    minhashPairsOfShingles(graft.ops.Lineage.truncate(shinglesOf(docs, nfc)))
 
-  /** The banding/verify pipeline from an already-built (and ideally
-    * cached) shingle table — callers that also consume the shingles
-    * directly (the hostile-corpus gate's per-doc diag) pass ONE cached
-    * frame here instead of shingling the corpus twice.
+  private val minhashHashes = 8
+
+  /** MinHash signatures and LSH band candidates over a (doc_id, shingle)
+    * table — the one definition q_minhash_lsh, q_minhash_est and
+    * q_lsh_recall share. Signature: 8 hashes = min(md5('<i>:' || shingle));
+    * banding: 4 bands × 2 rows, band key = concat of the band's minhashes;
+    * candidates = distinct (doc_a < doc_b) pairs sharing any band key.
+    * Returns (signatures (doc_id, h0..h7), candidates (doc_a, doc_b)). The
+    * band self-join reads the signature aggregate from both sides through
+    * one reused exchange, so the signatures are not pinned.
     */
-  private[queries] def minhashPairsOfShingles(sh: DataFrame): DataFrame = {
-    val numHashes = 8
+  private[queries] def minhashCandidates(sh: DataFrame): (DataFrame, DataFrame) = {
     val rowsPerBand = 2
-    val aggs = (0 until numHashes).map(i =>
+    val aggs = (0 until minhashHashes).map(i =>
       min(md5(concat(lit(s"$i:"), col("shingle")))).as(s"h$i"))
-    // cache: the band self-join reads signatures from both join sides.
-    val sig = sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*).cache()
-    val bandKeys = (0 until numHashes / rowsPerBand).map { b =>
+    val sig = sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+    val bandKeys = (0 until minhashHashes / rowsPerBand).map { b =>
       concat((0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}")): _*)
     }
     val bands = sig.select(col("doc_id"),
@@ -111,6 +115,16 @@ object SimilarityQueries {
       .where(col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
+    (sig, cand)
+  }
+
+  /** The banding/verify pipeline from an already-built (and ideally
+    * pinned) shingle table — callers that also consume the shingles
+    * directly (the hostile-corpus gate's per-doc diag) pass ONE pinned
+    * frame here instead of shingling the corpus twice.
+    */
+  private[queries] def minhashPairsOfShingles(sh: DataFrame): DataFrame = {
+    val (_, cand) = minhashCandidates(sh)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     // No broadcast hint on cand: the candidate-pair set grows with corpus
     // size × duplication rate, so a forced broadcast OOMs at scale. Plain
@@ -260,7 +274,7 @@ object SimilarityQueries {
     * the standard cheap/accurate trade at corpus scale.
     */
   def qNgramJaccard(s: SparkSession, dir: String): DataFrame = {
-    val sh = shingles(s, dir).cache()
+    val sh = graft.ops.Lineage.truncate(shingles(s, dir))
     // Inverted-index candidate generation with a document-frequency cap:
     // a shingle appearing in >50 docs contributes ~df² pairs and no
     // discriminative signal (shared-vocab noise) — dropping it bounds the
@@ -277,12 +291,11 @@ object SimilarityQueries {
       .agg(count(lit(1)).as("shared_shingles"))
       .filter(col("shared_shingles") >= 5)
       .select(col("doc_a"), col("doc_b"))
-    val grams = Tables.documents(s, dir)
+    val grams = graft.ops.Lineage.truncate(Tables.documents(s, dir)
       .filter(length(col("text")) >= 4)
       .select(col("doc_id"), explode(array_distinct(
         expr("transform(sequence(1, length(text)-3), i -> substring(text, i, 4))")))
-        .as("gram"))
-      .cache()
+        .as("gram")))
     val sizes = grams.groupBy(col("doc_id")).agg(count(lit(1)).as("n_g"))
     // Corpus-dependent candidate set: no broadcast hint (see q_minhash_lsh).
     val inter = cand
@@ -318,7 +331,7 @@ object SimilarityQueries {
     * SCALE.md "Answer-proportional queries — sizing rules".
     */
   def qContainment(s: SparkSession, dir: String): DataFrame = {
-    val sh = shingles(s, dir).cache()
+    val sh = graft.ops.Lineage.truncate(shingles(s, dir))
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val rare = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= 50).select(col("shingle"))
@@ -479,19 +492,18 @@ object SimilarityQueries {
           |  CAST(2 * ((CAST(conv(substring(h, CAST(p DIV 4 AS INT) + 1, 1), 16, 10) AS INT)
           |    >> (p % 4)) & 1) - 1 AS INT))""".stripMargin))
       .select(col("tok"), col("varr"))
-    // cache: the banded self-join references fingerprints 16× (8 chunk
+    // pinned: the banded self-join references fingerprints 16× (8 chunk
     // branches × both join sides) — without materialization the whole vote
     // pipeline re-executes per branch. #docs rows, trivially small; at
     // corpus scale this is the signature TABLE you would persist anyway.
-    val fp = docTok.join(broadcast(vocab), "tok")
+    val fp = graft.ops.Lineage.truncate(docTok.join(broadcast(vocab), "tok")
       .groupBy(col("doc_id"))
       .agg(expr(
         """aggregate(collect_list(varr), CAST(array_repeat(0, 64) AS ARRAY<INT>),
           |  (acc, v) -> zip_with(acc, v, (a, b) -> a + b))""".stripMargin).as("votes"))
       .select(col("doc_id"), expr(
         "array_join(transform(votes, v -> CASE WHEN v > 0 THEN '1' ELSE '0' END), '')")
-        .as("fp"))
-      .cache()
+        .as("fp")))
     // Banding: 2 chunks of 32 bits. Pigeonhole: a pair at hamming ≤ 1 has
     // at least one untouched half. Chunks must be WIDE here because this
     // corpus's fingerprints are correlated (shared vocabulary): 8-bit
@@ -628,17 +640,21 @@ object SimilarityQueries {
     // fingerprint bit-identical to srpHofExpr over this very corpus); the
     // exact BigDecimal ops dominate this stage, which is the price of the
     // engine-agnostic sign contract.
-    val fp = Tables.embeddings(s, dir)
+    val fp = graft.ops.Lineage.truncate(Tables.embeddings(s, dir)
       .withColumn("fp", srpFingerprint(col("embedding")))
-      .select(col("vec_id"), col("fp"))
-      .cache()
+      .select(col("vec_id"), col("fp")))
     val bands = fp.select(col("vec_id"),
       posexplode(expr(s"transform(sequence(0, ${nBands - 1}), " +
           s"b -> substring(fp, b * $bandBits + 1, $bandBits))"))
         .as(Seq("band", "bkey")))
+    // hash the pairs on vec_a at the table fanout's width before the
+    // distinct: the truncated fingerprints carry no partitioning, and a
+    // plain distinct's exchange is coalesced by AQE into one task, which
+    // then runs the whole decimal verify stage below on one core
     val cand = bands.as("x").join(bands.as("y"), Seq("band", "bkey"))
       .where(col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
+      .repartition(s.sparkContext.defaultParallelism, col("vec_a"))
       .distinct()
     // verify stage: fused exact-decimal kernel, bit-identical to the
     // declarative DECIMAL(28,14) fold (FunctionsSpec pins it)
@@ -1448,15 +1464,15 @@ object SimilarityQueries {
     val resid = "zip_with(%s, %s, (x, y) -> CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
     val coarse = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("embedding").as("cemb"))
-    val assigned = e.select(col("vec_id"), col("embedding"))
+    // pinned: feeds the codebook, the encode pass, and nothing else
+    val assigned = graft.ops.Lineage.truncate(e.select(col("vec_id"), col("embedding"))
       .crossJoin(broadcast(coarse))
       .withColumn("d", expr("decimal_sqdist(embedding, cemb)"))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("vec_id")).orderBy(col("d"), col("cid"))))
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("cid"),
-        expr(resid.format("embedding", "cemb")).as("res"))
-      .persist() // feeds the codebook, the encode pass, and nothing else
+        expr(resid.format("embedding", "cemb")).as("res")))
     val subs = array((0 until 4).map(i => lit(i.toLong)): _*)
     val cb = assigned.filter(col("vec_id") < 4)
       .withColumn("s", explode(subs))
@@ -1773,25 +1789,13 @@ object SimilarityQueries {
     * is computed only for LSH candidates, never all pairs.
     */
   def qMinhashEstimate(s: SparkSession, dir: String): DataFrame = {
-    val sh = shingles(s, dir).cache()
-    val numHashes = 8
-    val aggs = (0 until numHashes).map(i =>
-      min(md5(concat(lit(s"$i:"), col("shingle")))).as(s"h$i"))
-    val sig = sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*).cache()
-    val bandKeys = (0 until numHashes / 2).map { b =>
-      concat(col(s"h${b * 2}"), col(s"h${b * 2 + 1}"))
-    }
-    val bands = sig.select(col("doc_id"),
-      posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
-    val cand = bands.as("x").join(bands.as("y"), Seq("band", "bkey"))
-      .where(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
+    val sh = graft.ops.Lineage.truncate(shingles(s, dir))
+    val (sig, cand) = minhashCandidates(sh)
     val sigA = sig.select(col("doc_id").as("doc_a") +:
-      (0 until numHashes).map(i => col(s"h$i").as(s"a$i")): _*)
+      (0 until minhashHashes).map(i => col(s"h$i").as(s"a$i")): _*)
     val sigB = sig.select(col("doc_id").as("doc_b") +:
-      (0 until numHashes).map(i => col(s"h$i").as(s"b$i")): _*)
-    val matches = (0 until numHashes)
+      (0 until minhashHashes).map(i => col(s"h$i").as(s"b$i")): _*)
+    val matches = (0 until minhashHashes)
       .map(i => when(col(s"a$i") === col(s"b$i"), 1L).otherwise(0L))
       .reduce(_ + _)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
@@ -1925,21 +1929,9 @@ object SimilarityQueries {
     * SCALE.md "Answer-proportional queries — sizing rules".
     */
   def qLshRecall(s: SparkSession, dir: String): DataFrame = {
-    val sh = shingles(s, dir).cache()
+    val sh = graft.ops.Lineage.truncate(shingles(s, dir))
     // band candidates — q_minhash_lsh's derivation, stopped before verify
-    val numHashes = 8; val rowsPerBand = 2
-    val aggs = (0 until numHashes).map(i =>
-      min(md5(concat(lit(s"$i:"), col("shingle")))).as(s"h$i"))
-    val sig = sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-    val bandKeys = (0 until numHashes / rowsPerBand).map { b =>
-      concat((0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}")): _*)
-    }
-    val bands = sig.select(col("doc_id"),
-      posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
-    val cand = bands.as("x").join(bands.as("y"), Seq("band", "bkey"))
-      .where(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
+    val (_, cand) = minhashCandidates(sh)
     val exact = graft.ops.PrefixFilterJoin
       .jaccardSelfJoin(sh.withColumnRenamed("shingle", "tok"), "doc_id", "tok", 6, 10)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))

@@ -856,7 +856,7 @@ object TextQueries {
     * rebuilt text), so a single mis-ordered or mis-dropped segment
     * anywhere breaks the gate. Output: every doc that lost content, with
     * segment/char accounting.
-    * Scale: one explode to ~n_words/8 segment rows (persisted — it feeds
+    * Scale: one explode to ~n_words/8 segment rows (re-derived by each of
     * the df count, the per-doc totals, and the anti-join probe), a
     * map-side-combinable distinct-df aggregate on the segment key, a
     * left-anti join (AQE: broadcast while the boilerplate table is small,
@@ -873,16 +873,14 @@ object TextQueries {
     * segmentation/anti-join/reassembly code, not a copy.
     */
   private[queries] def lineDedupOf(docs: DataFrame): DataFrame = {
+    // no pin: the segments feed three branches of the returned plan, and
+    // re-splitting the documents per branch is a narrow scan
     val segs = docs
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .select(col("doc_id"), posexplode(expr(
         """transform(sequence(0, CAST(ceil(size(ws) / 8.0) AS INT) - 1),
           |          i -> array_join(slice(ws, i * 8 + 1, 8), ' '))""".stripMargin))
         .as(Seq("seg_no", "seg")))
-      // released by the harness's per-query clearCache (Bench/Verify):
-      // the persist feeds three branches of the RETURNED lazy plan, so an
-      // in-body unpersist would fire before the caller materializes
-      .persist()
     val boiler = segs.groupBy(col("seg"))
       .agg(countDistinct(col("doc_id")).as("df"))
       .filter(col("df") >= 2)
@@ -1011,7 +1009,7 @@ object TextQueries {
     * That is the whole point vs exact counting: the corpus-wide state is
     * O(d·w), not O(vocabulary). The corpus is scanned ONCE: the exploded
     * bigram stream collapses straight into the vocabulary-sized exact-count
-    * table (persisted — it is ~vocab rows, kilobytes), and the sketch is
+    * table (truncated — it is ~vocab rows, kilobytes), and the sketch is
     * derived from it by weighted bucket aggregation (Σ per-bigram counts
     * per bucket ≡ per-instance bucket counts), so neither consumer re-runs
     * the document scan + tokenize + explode.
@@ -1025,10 +1023,9 @@ object TextQueries {
     def bucket(r: Int) =
       expr(s"(${Exact.md5IntExpr(s"concat('$r:', bigram)", 1, 3)}) % $w")
     val buckets = array((0 until d).map(bucket): _*)
-    val exact = bi.groupBy(col("bigram")).agg(count(lit(1)).as("exact"))
-      // released by the harness's per-query clearCache (Bench/Verify);
-      // feeds two branches of the returned plan, so no in-body unpersist
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // truncated: feeds two branches of the returned plan
+    val exact = graft.ops.Lineage.truncate(
+      bi.groupBy(col("bigram")).agg(count(lit(1)).as("exact")))
     val sketch = exact
       .select(col("exact"), posexplode(buckets).as(Seq("r", "bucket")))
       .groupBy(col("r"), col("bucket")).agg(sum(col("exact")).as("cnt"))

@@ -1,7 +1,8 @@
 package graft
 
 /** The driver-contract invariants plus a smoke run of every registered
-  * query at sf0.001: nonempty, distinct column names, runnable. The
+  * query at sf0.001: nonempty, distinct column names, runnable, and no
+  * CacheManager entry left behind. The
   * value-level gate is the DuckDB oracle (scripts/local_verify.py); this
   * suite catches regressions cheaply in `sbt test`.
   */
@@ -29,14 +30,19 @@ class RegistrySpec extends SparkSpec {
 
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name runs at sf0.001 with rows and distinct columns") {
-      val df = fn(spark, sfDir)
-      val cols = df.columns.toSeq
-      assert(cols.distinct.size == cols.size, s"duplicate output columns: $cols")
-      // Similarity pair-queries may legitimately be empty at the smallest
-      // sf (fewer planted near-dups); everything else must return rows.
-      val mayBeEmpty = Set("q_minhash_lsh", "q_ngram_jaccard", "q_simhash", "q_dedup_diag")
-      if (!mayBeEmpty(name)) assert(df.count() > 0, s"$name returned 0 rows")
-      else df.count() // still must execute
+      try {
+        val df = fn(spark, sfDir)
+        val cols = df.columns.toSeq
+        assert(cols.distinct.size == cols.size, s"duplicate output columns: $cols")
+        // Similarity pair-queries may legitimately be empty at the smallest
+        // sf (fewer planted near-dups); everything else must return rows.
+        val mayBeEmpty = Set("q_minhash_lsh", "q_ngram_jaccard", "q_simhash", "q_dedup_diag")
+        if (!mayBeEmpty(name)) assert(df.count() > 0, s"$name returned 0 rows")
+        else df.count() // still must execute
+        // no query leaves a cached frame in the caller's session
+        // (graft.ops.Lineage is the one materialization rule)
+        assert(spark.sharedState.cacheManager.isEmpty, s"$name left a CacheManager entry")
+      } finally spark.catalog.clearCache()
     }
   }
 }

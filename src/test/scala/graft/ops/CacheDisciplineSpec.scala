@@ -1,31 +1,50 @@
 package graft.ops
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 
-/** Cached-storage discipline (r10 verdict item #3): a long registry sweep
-  * must hold cached storage FLAT — query-local persist()s are released by
-  * the harness's per-query clearCache (Bench and, since r11, Verify), and
-  * the lineage-truncation/memo RDDs that legitimately survive (localCheckpoint
-  * blocks are RDD-layer, not CacheManager entries) must be CONSTANT across
-  * repeats, not per-run accumulation.
+/** Storage discipline: a query builder materializes only through
+  * [[Lineage]], so a long registry sweep holds storage FLAT with no
+  * harness help. Truncated frames are released by the ContextCleaner once
+  * their plans are garbage; the memoized unigram lattice legitimately
+  * survives, but must be CONSTANT across repeats, not per-run accumulation.
   */
 class CacheDisciplineSpec extends SparkSpec {
 
-  private def persistentRddCount: Int = spark.sparkContext.getPersistentRDDs.size
+  /** Persistent RDDs left once the ContextCleaner has released everything
+    * unreachable: collect garbage until the count stops falling.
+    */
+  private def settledRddCount(): Int = {
+    def count = spark.sparkContext.getPersistentRDDs.size
+    var last = Int.MaxValue
+    var now = count
+    var tries = 0
+    while (now < last && tries < 20) {
+      last = now
+      System.gc()
+      Thread.sleep(500)
+      now = count
+      tries += 1
+    }
+    now
+  }
 
-  test("persisting queries + per-query clearCache hold storage flat across repeats") {
-    val persistingQueries = Seq(
-      "q_line_dedup",      // segment frame persist
-      "q_heavy_hitters",   // exact-count table persist
-      "q_image_phash",     // fingerprint frame persist
-      "q_unigram_refit"    // memoized lattice (localCheckpoint, survives by design)
+  test("queries hold storage flat across repeats without clearCache") {
+    val materializingQueries = Seq(
+      "q_pagerank",        // per-round truncates
+      "q_heavy_hitters",   // exact-count table
+      "q_image_phash",     // fingerprint frame
+      "q_unigram_refit"    // memoized lattice (survives by design)
     )
     def sweep(): Int = {
-      persistingQueries.foreach { q =>
+      materializingQueries.foreach { q =>
         graft.SparkEntry.queries(q)(spark, sfDir).foreach(_ => ())
-        spark.catalog.clearCache()
+        assert(spark.sharedState.cacheManager.isEmpty, s"$q left a CacheManager entry")
       }
-      persistentRddCount
+      settledRddCount()
     }
     val afterFirst = sweep()
     val afterSecond = sweep()
@@ -38,27 +57,35 @@ class CacheDisciplineSpec extends SparkSpec {
       s"storage grew across sweeps: $afterFirst -> $afterThird")
   }
 
-  test("Caches.swap keeps a same-plan new generation cached (shared entry survives)") {
-    import org.apache.spark.sql.functions.col
-    // two INSTANCES with the same canonicalized plan: CacheManager keys by
-    // plan, so b.cache() is a no-op hit on a's entry — swap must not
-    // unpersist a (that would evict the one shared entry and leave the new
-    // generation uncached, the opposite of the documented invariant)
-    val a = spark.range(10).toDF("n").filter(col("n") > 2)
-    val b = spark.range(10).toDF("n").filter(col("n") > 2)
+  test("only Lineage.scala under src/main caches or persists") {
+    val needles = Seq(".cache()", ".persist(")
+    val st = Files.walk(Paths.get("src/main"))
+    val hits: Seq[Path] =
+      try st.iterator().asScala
+        .filter { p =>
+          p.toString.endsWith(".scala") && {
+            val src = Files.readString(p)
+            needles.exists(src.contains)
+          }
+        }
+        .toSeq
+      finally st.close()
+    assert(hits.map(_.getFileName.toString) == Seq("Lineage.scala"), hits.mkString(", "))
+  }
+
+  test("Lineage.pinned releases its own pin, not a caller's cache entry") {
+    val df = spark.range(100).toDF("n")
+    assert(Lineage.pinned(df)(_.count()) == 100L)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    intercept[IllegalStateException] {
+      Lineage.pinned(df) { p => p.count(); throw new IllegalStateException("body failed") }
+    }
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // a caller's own entry for the same plan is read, not evicted
+    val mine = spark.range(100).toDF("n").cache()
     try {
-      // Dataset.storageLevel IS a cache-manager lookup on the canonicalized
-      // plan: NONE means no resident entry covers this frame
-      Caches.swap("spec_sameplan", a)
-      Caches.swap("spec_sameplan", b)
-      assert(b.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
-        "same-plan swap evicted the shared cache entry")
-      // a genuinely NEW plan still releases the old generation
-      val c = spark.range(10).toDF("n").filter(col("n") > 3)
-      Caches.swap("spec_sameplan", c)
-      assert(c.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-      assert(a.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-        "distinct-plan swap failed to release the previous generation")
-    } finally spark.catalog.clearCache()
+      assert(Lineage.pinned(spark.range(100).toDF("n"))(_.count()) == 100L)
+      assert(mine.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    } finally mine.unpersist()
   }
 }

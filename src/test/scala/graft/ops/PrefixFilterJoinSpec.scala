@@ -37,17 +37,19 @@ class PrefixFilterJoinSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   test("prefix-filtered join ≡ brute force at t=0.6 on the corpus") {
-    val p = postings(sfDir).cache()
-    val b = brute(p, 6, 10)
-    assert(pruned(p, 6, 10) === b)
-    assert(b.nonEmpty, "threshold too high for the corpus — gate would be vacuous")
+    Lineage.pinned(postings(sfDir)) { p =>
+      val b = brute(p, 6, 10)
+      assert(pruned(p, 6, 10) === b)
+      assert(b.nonEmpty, "threshold too high for the corpus — gate would be vacuous")
+    }
   }
 
   test("prefix-filtered join ≡ brute force at t=0.3 (wider candidate set)") {
     // a corpus slice: brute force at t=0.3 over the full corpus is minutes
     // of all-pairs; a third of the docs exercises the same arithmetic
-    val p = postings(sfDir).filter(col("doc_id") % 3 === 0).cache()
-    assert(pruned(p, 3, 10) === brute(p, 3, 10))
+    Lineage.pinned(postings(sfDir).filter(col("doc_id") % 3 === 0)) { p =>
+      assert(pruned(p, 3, 10) === brute(p, 3, 10))
+    }
   }
 
   test("t=1 finds exactly the identical token sets") {
