@@ -31,6 +31,8 @@ import graft.plans.AsofJoinExec
   * best of the runs per phase. The Spark counters (jobs, stages, tasks,
   * shuffle bytes, spill, GC, executor CPU) and the micro-batches with their
   * `triggerExecution` ms cover the last timed run, build through exec.
+  * `max_task_share` is that run's longest exec-phase task ÷ its exec wall
+  * (as e2ebench computes it): near 1, one task held the whole exec.
   *
   * A ScaleGuard refusal is recorded as a skip (the guard working), any
   * other error as a failure; the process exits nonzero if a query failed.
@@ -47,7 +49,7 @@ object Probe extends AdaptiveSparkPlanHelper {
       buildS: Double = 0, planS: Double = 0, execS: Double = 0, rows: Long = 0,
       jobs: Long = 0, stages: Long = 0, tasks: Long = 0,
       shuffleReadBytes: Long = 0, shuffleWriteBytes: Long = 0, spillBytes: Long = 0,
-      gcS: Double = 0, cpuS: Double = 0,
+      gcS: Double = 0, cpuS: Double = 0, maxTaskShare: Double = 0,
       joins: Map[String, Int] = Map.empty, batchMs: Seq[Long] = Nil, plan: String = "") {
 
     def json: String = {
@@ -65,6 +67,7 @@ object Probe extends AdaptiveSparkPlanHelper {
           "tasks" -> tasks.toString, "shuffle_read_bytes" -> shuffleReadBytes.toString,
           "shuffle_write_bytes" -> shuffleWriteBytes.toString,
           "spill_bytes" -> spillBytes.toString, "gc_s" -> num(gcS), "cpu_s" -> num(cpuS),
+          "max_task_share" -> num(maxTaskShare),
           "joins" -> joins.toSeq.sorted.map { case (k, v) => s"${str(k)}:$v" }
             .mkString("{", ",", "}"),
           "batches" -> batchMs.size.toString, "batch_ms" -> batchMs.mkString("[", ",", "]"),
@@ -134,17 +137,20 @@ object Probe extends AdaptiveSparkPlanHelper {
           val t1 = System.nanoTime()
           df.queryExecution.executedPlan
           val t2 = System.nanoTime()
+          if (i == Runs) meter.execFromMs = System.currentTimeMillis()
           df.foreach(_ => ())
           val t3 = System.nanoTime()
           Seq(t1 - t0, t2 - t1, t3 - t2)
         } finally if (i == Runs) meter.detach(spark)
       }
       val Seq(build, plan, exec) = phases.transpose.map(_.min / 1e9)
+      val lastExecS = phases.last(2) / 1e9
       meter.synchronized(Record(name, "ok",
         buildS = build, planS = plan, execS = exec, rows = rows,
         jobs = meter.jobs, stages = meter.stages, tasks = meter.tasks,
         shuffleReadBytes = meter.shuffleRead, shuffleWriteBytes = meter.shuffleWrite,
         spillBytes = meter.spill, gcS = meter.gcMs / 1e3, cpuS = meter.cpuNs / 1e9,
+        maxTaskShare = if (lastExecS > 0) meter.maxExecTaskMs / 1e3 / lastExecS else 0,
         joins = joinHistogram(finalPlan), batchMs = meter.batchMs.toSeq,
         plan = finalPlan match {
           case a: AdaptiveSparkPlanExec => a.executedPlan.toString
@@ -169,9 +175,12 @@ object Probe extends AdaptiveSparkPlanHelper {
 
   /** Spark counters and micro-batches of one run. Listener events arrive
     * asynchronously, so the bus is drained on attach (no earlier run's
-    * events) and on detach (all of this run's). */
+    * events) and on detach (all of this run's). A task launched at or after
+    * `execFromMs` belongs to the exec phase. */
   private final class Meter extends SparkListener {
     var jobs, stages, tasks, shuffleRead, shuffleWrite, spill, gcMs, cpuNs = 0L
+    @volatile var execFromMs = Long.MaxValue
+    var maxExecTaskMs = 0L
     val batchMs = mutable.ArrayBuffer[Long]()
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
@@ -179,6 +188,8 @@ object Probe extends AdaptiveSparkPlanHelper {
       synchronized { stages += 1 }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
       tasks += 1
+      if (e.taskInfo.launchTime >= execFromMs)
+        maxExecTaskMs = math.max(maxExecTaskMs, e.taskInfo.duration)
       Option(e.taskMetrics).foreach { m =>
         shuffleRead += m.shuffleReadMetrics.totalBytesRead
         shuffleWrite += m.shuffleWriteMetrics.bytesWritten

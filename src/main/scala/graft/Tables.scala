@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loaders for the driver-generated TPC-H-ish parquet tables (TESTDATA.md).
   *
@@ -11,6 +13,13 @@ import org.apache.spark.sql.types.LongType
   * push filters and prune columns down to the scan — at 100 TB the scan is
   * the dominant cost and pushdown/pruning is what keeps it linear in the
   * columns/rows actually needed.
+  *
+  * A load starts no Spark job: [[read]] takes the schema from one parquet
+  * footer on the driver and hands it to the reader, where
+  * `spark.read.parquet` would run a one-task schema-inference job per call
+  * (30–60 ms each, a dozen per registry pass). Nothing is memoized; every
+  * call reads the footer again, so a rewritten table is never served a
+  * stale schema.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -25,7 +34,7 @@ object Tables {
     // disable NTZ inference once at build time (SessionConf.overlay);
     // ntzToLtz below is the belt for sessions built elsewhere (UTC
     // sessions make the cast byte-identical to reading as LTZ).
-    val df = ntzToLtz(spark.read.parquet(path))
+    val df = ntzToLtz(read(spark, path))
     // The driver-generated files hold ONE parquet row group each, so a scan
     // is a single task no matter what maxPartitionBytes says — and every
     // downstream aggregate/join inherits that single thread. Fan out the
@@ -35,11 +44,9 @@ object Tables {
     // branch must NOT fire (a full-table round-robin shuffle straight off
     // the scan is pure overhead there) — the 100× rehearsal caught the
     // original size-only test adding ~0.6 GB of shuffle to every lineitem
-    // query over a 102-part input, so the guard now also requires the
-    // input to actually BE the few-big-files shape maxPartitionBytes
-    // cannot split. Disable outright with SPARK_GRAFT_FANOUT=0.
-    val fanout = sys.env.getOrElse("SPARK_GRAFT_FANOUT", "1") != "0"
-    if (fanout && leafFileCount(spark, path) < 4 && fileSize(spark, path) > (1L << 18))
+    // query over a 102-part input, so the guard also requires the input
+    // to actually BE the few-big-files shape maxPartitionBytes cannot split.
+    if (leafFileCount(spark, path) < 4 && fileSize(spark, path) > (1L << 18))
       // HASH fanout on the table's leading column (every sf table leads
       // with a near-unique id) rather than round-robin (r15 optimization,
       // guide §2.4/§2.5): round-robin repartition first pays a local
@@ -66,6 +73,38 @@ object Tables {
       if (f.dataType == TimestampNTZType) col(f.name).cast(TimestampType).as(f.name)
       else col(f.name)
     }.toIndexedSeq: _*)
+  }
+
+  /** `spark.read.parquet(path)` without its schema-inference job: the
+    * schema comes from [[schemaOf]] and is passed to the reader, which
+    * then only lists the files. A path with no readable footer (missing,
+    * or a directory without data files) reads as before, so it fails with
+    * Spark's own error. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    schemaOf(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  /** The schema `spark.read.parquet(path)` infers, read from one footer on
+    * the driver. The footer is the one Spark's non-merging inference reads:
+    * `_common_metadata`, else `_metadata`, else the first data file in path
+    * order, among the files Spark's file index lists (hidden `_x`/`.x`
+    * names skipped, `key=value` partition directories walked). Partition
+    * columns are not in the footer; the reader adds them from the
+    * directory names as inference does. None when no such file exists. */
+  def schemaOf(spark: SparkSession, path: String): Option[StructType] = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = root.getFileSystem(conf)
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (st.isFile) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => PlanBridge.hiddenPathName(c.getPath.getName))
+        .flatMap(leaves)
+    val files =
+      if (!fs.exists(root)) Nil else leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString)
+    val summaries = Seq("_common_metadata", "_metadata")
+    summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      .map(PlanBridge.parquetFooterSchema(spark, _, conf))
   }
 
   private def fileSize(spark: SparkSession, path: String): Long = {

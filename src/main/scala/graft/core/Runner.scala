@@ -46,7 +46,8 @@ object Runner {
     * Each checkpoint is read back with the schema of the stage frame that
     * wrote it, so the read-back starts no schema-inference job; Spark makes
     * a given file-source schema nullable, which is what inference returns.
-    * The replay seed has no stage frame, so its read infers.
+    * The replay seed has no stage frame; it takes its schema from the
+    * checkpoint's parquet footer ([[graft.Tables.read]]), also without a job.
     */
   def runCheckpointed(
       spark: SparkSession,
@@ -65,7 +66,7 @@ object Runner {
         val prev = names(startIdx - 1)
         val path = s"$checkpointDir/$prev"
         require(exists(spark, s"$path/_SUCCESS"), s"replay checkpoint missing: $path")
-        spark.read.parquet(path)
+        graft.Tables.read(spark, path)
       }
     val runId = java.util.UUID.randomUUID().toString
     p.stages.drop(startIdx).foreach { st =>
@@ -88,7 +89,7 @@ object Runner {
   /** Replay helper mirroring the reference's "fill work queue from cache":
     * read a stage's checkpoint without running anything. */
   def checkpointOf(spark: SparkSession, checkpointDir: String, stage: String): DataFrame =
-    spark.read.parquet(s"$checkpointDir/$stage")
+    graft.Tables.read(spark, s"$checkpointDir/$stage")
 
   private def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)

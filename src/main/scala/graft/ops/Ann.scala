@@ -38,8 +38,11 @@ object Ann {
   /** A trained IVF coarse quantizer: `assigned` = the corpus plus an int
     * `cell` column (nearest trained centroid), `centroids` = the trained
     * k×dim table (cell, centroid: array<double>) — O(k) rows, broadcastable.
+    * `nCells` = the number of cells, carried so [[writeIndex]] sizes its
+    * layout without a Spark job: the centroid count for a [[fit]] model,
+    * the stored cell directories for a [[readIndex]] one.
     */
-  final case class IvfModel(assigned: DataFrame, centroids: DataFrame)
+  final case class IvfModel(assigned: DataFrame, centroids: DataFrame, nCells: Long)
 
   /** Train IVF cells from an UNLABELED corpus — the production path the
     * [[centroids]] scaladoc promised ("a production build would
@@ -132,7 +135,7 @@ object Ann {
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.DoubleType, containsNull = false),
           nullable = false))))
-    IvfModel(assigned(), centTable)
+    IvfModel(assigned(), centTable, cells.size)
   }
 
   /** Persist a trained IVF index as the thing that makes IVF pay at
@@ -148,7 +151,7 @@ object Ann {
     * scans the whole corpus and IVF only saves kernel evaluations.
     */
   def writeIndex(model: IvfModel, path: String, cellCol: String = "cell"): Unit = {
-    clusterForWrite(model.assigned, cellCol, nCells = model.centroids.count())
+    clusterForWrite(model.assigned, cellCol, model.nCells)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy(cellCol).parquet(s"$path/corpus")
     model.centroids.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -182,9 +185,11 @@ object Ann {
     val perCell = est / math.max(1L, nCells)
     val slices = (perCell / targetFileBytes + 1).min(BigInt(maxP)).toInt
     val width = math.max(1L, math.min(maxP, nCells * slices)).toInt
-    // an already-narrow producer (a staged single-file micro-batch) writes
-    // few files as-is — a clustering shuffle would add a stage for nothing
-    if (assigned.rdd.getNumPartitions <= width) assigned
+    // a producer of P partitions writes up to P files per cell, clustering
+    // leaves `slices` per cell: only a producer no wider than that (a
+    // staged single-file micro-batch) writes as few files as-is, and a
+    // clustering shuffle would add a stage for nothing
+    if (assigned.rdd.getNumPartitions <= slices) assigned
     else if (slices <= 1) assigned.repartition(width, col(cellCol))
     else {
       val payload = assigned.columns.filterNot(_ == cellCol).map(col).toSeq
@@ -199,8 +204,11 @@ object Ann {
     * [[replaceIndex]]-managed index serves its newest COMPLETE version. */
   def readIndex(spark: SparkSession, path: String): IvfModel = {
     val root = currentRoot(spark, path)
-    IvfModel(spark.read.parquet(s"$root/corpus"),
-      spark.read.parquet(s"$root/centroids"))
+    val corpus = new org.apache.hadoop.fs.Path(s"$root/corpus")
+    val fs = corpus.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cellDirs = fs.listStatus(corpus).count(st => st.isDirectory && st.getPath.getName.contains("="))
+    IvfModel(graft.Tables.read(spark, corpus.toString),
+      graft.Tables.read(spark, s"$root/centroids"), cellDirs)
   }
 
   /** The current data root of an index at `path`. A [[replaceIndex]]-managed
@@ -328,13 +336,12 @@ object Ann {
     // read the centroids from the SAME resolved root the write targets —
     // resolving twice (via readIndex) could straddle a concurrent replace
     // and pair new centroids with the old generation's corpus
-    val centroids = spark.read.parquet(s"$root/centroids")
+    val cents = centroidRows(graft.Tables.read(spark, s"$root/centroids"))
     val rows = screenDim match {
       case Some(d) => newRows.filter(Validate.embeddingVerdict(spark, embCol, d) === "ok")
       case None => newRows
     }
-    clusterForWrite(assign(rows, centroids, embCol, cellCol, exactArith),
-        cellCol, nCells = centroids.count())
+    clusterForWrite(assignTo(rows, cents, embCol, cellCol, exactArith), cellCol, cents.size)
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .partitionBy(cellCol).parquet(s"$root/corpus")
   }
@@ -380,13 +387,12 @@ object Ann {
       fs.delete(staging, true)
       return false
     }
-    val centroids = spark.read.parquet(s"$root/centroids")
+    val cents = centroidRows(graft.Tables.read(spark, s"$root/centroids"))
     val rows = screenDim match {
       case Some(d) => batch.filter(Validate.embeddingVerdict(spark, embCol, d) === "ok")
       case None => batch
     }
-    clusterForWrite(assign(rows, centroids, embCol, cellCol, exactArith),
-        cellCol, nCells = centroids.count())
+    clusterForWrite(assignTo(rows, cents, embCol, cellCol, exactArith), cellCol, cents.size)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy(cellCol).parquet(staging.toString)
     // wipe a previous attempt's partial publish of THIS batch, then move
@@ -649,13 +655,22 @@ object Ann {
     */
   def assign(corpus: DataFrame, centroids: DataFrame,
              embCol: String = "embedding", cellCol: String = "cell",
-             exactArith: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
+             exactArith: Boolean = false): DataFrame =
+    assignTo(corpus, centroidRows(centroids), embCol, cellCol, exactArith)
+
+  /** A centroid table's (cell, centroid) rows on the driver, by cell id. */
+  private def centroidRows(centroids: DataFrame): Seq[(Int, Seq[Double])] = {
     val rows = centroids.collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq).sortBy(_._1)
+      .map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq).sortBy(_._1).toSeq
     require(rows.nonEmpty, "assign needs a nonempty centroid table")
-    corpus.withColumn(cellCol,
-      assignExpr(embCol, rows.map(_._1).toSeq, rows.map(_._2).toSeq, exactArith))
+    rows
+  }
+
+  /** [[assign]] under centroid rows already on the driver. */
+  private def assignTo(corpus: DataFrame, rows: Seq[(Int, Seq[Double])],
+                       embCol: String, cellCol: String, exactArith: Boolean): DataFrame = {
+    graft.functions.GraftFunctions.register(corpus.sparkSession)
+    corpus.withColumn(cellCol, assignExpr(embCol, rows.map(_._1), rows.map(_._2), exactArith))
   }
 
   /** The narrow literal-centroid argmin shared by [[fit]] and [[assign]]:

@@ -358,7 +358,7 @@ object NorthStarQueries {
     val model = Ann.fit(corpus, k = 4, iters = 2, exactArith = true)
     val idx = graft.ops.Scratch.dir("ann_stream_idx").toString
     Ann.writeIndex(
-      Ann.IvfModel(model.assigned.filter(col("vec_id") % 4 === 0), model.centroids), idx)
+      model.copy(assigned = model.assigned.filter(col("vec_id") % 4 === 0)), idx)
     val stage = stageEmbeddingBatches(s,
       corpus.filter(col("vec_id") % 4 =!= 0)
         .withColumn("b", (col("vec_id") % 4 - 1).cast("int")))
@@ -402,7 +402,7 @@ object NorthStarQueries {
     val model = Ann.fit(corpus, k = 4, iters = 2, exactArith = true)
     val idx = graft.ops.Scratch.dir("ann_compact_idx").toString
     Ann.writeIndex(
-      Ann.IvfModel(model.assigned.filter(col("vec_id") % 3 === 0), model.centroids), idx)
+      model.copy(assigned = model.assigned.filter(col("vec_id") % 3 === 0)), idx)
     Ann.appendToIndex(s, corpus.filter(col("vec_id") % 3 === 1), idx, exactArith = true)
     Ann.appendToIndex(s, corpus.filter(col("vec_id") % 3 === 2), idx, exactArith = true)
     // 4 MB target: demonstration-scale — at the 100× rehearsal each ~13 MB

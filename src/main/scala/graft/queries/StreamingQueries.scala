@@ -52,7 +52,7 @@ object StreamingQueries {
 
   private def eventStream(s: SparkSession, dir: String): DataFrame = {
     graft.Tables.nanosAsLong(s)
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.read(s, s"$dir/events.parquet").schema
     val raw = streamTable(s, dir, "events.parquet", schema)
     val fixed =
       if (schema("ts").dataType == LongType)
@@ -504,7 +504,7 @@ object StreamingQueries {
     * streaming dedup carries); gates are stateless and fuse into the scan.
     */
   def qStreamCuration(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.Tables.read(s, s"$dir/documents.parquet").schema
     val docs = streamTable(s, dir, "documents.parquet", schema)
     val norm = sha2(regexp_replace(
       regexp_replace(lower(col("text")), "[^a-z0-9 ]", ""), " +", " "), 256)

@@ -1,7 +1,14 @@
 package org.apache.spark.sql.graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** The private[sql] doorways the library needs: turning a custom
@@ -9,7 +16,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * for this, so — like every plan-extending Spark library — this object
   * lives under `org.apache.spark.sql` solely to reach `Dataset.ofRows`),
   * unloading the state-store provider registry between throwaway
-  * streaming drains, and draining the listener bus for `graft.Probe`.
+  * streaming drains, draining the listener bus for `graft.Probe`, and
+  * reading a parquet file's Spark schema the way Spark's own inference
+  * does (for `graft.Tables.read`).
   * Nothing else in the library uses package-private Spark API.
   */
 object PlanBridge {
@@ -29,6 +38,23 @@ object PlanBridge {
     * action would otherwise miss its last tasks. */
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** The schema Spark's parquet inference derives from `file`'s footer:
+    * Spark's own row-schema key if the file carries one, else the parquet
+    * schema converted under the session's SQLConf (nanos-as-long, NTZ
+    * inference, binary-as-string), made nullable as every file-source
+    * schema is. Reads the footer on the driver; starts no Spark job. */
+  def parquetFooterSchema(spark: SparkSession, file: FileStatus, conf: Configuration): StructType = {
+    val meta = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)).asNullable
+  }
+
+  /** True when Spark's file index skips a path of this name (`_x`, `.x`,
+    * `x._COPYING_`; the `_metadata`/`_common_metadata` summaries are kept). */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)

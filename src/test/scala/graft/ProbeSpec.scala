@@ -11,6 +11,8 @@ class ProbeSpec extends SparkSpec {
     assert(r.jobs >= 1 && r.stages >= 1 && r.tasks >= 1)
     assert(r.joins.nonEmpty, r.plan)
     assert(r.plan.contains("Join"))
+    assert(r.maxTaskShare > 0 && r.maxTaskShare <= 1, r.json)
+    assert(r.json.contains(""""max_task_share":"""))
     assert(r.json.startsWith("""{"query":"q3_join","status":"ok","""))
   }
 

@@ -15,6 +15,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs `body` starts, counted by a listener; the bus is drained
+    * on both sides so no other action's events are counted. */
+  def jobsIn(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.PlanBridge
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    PlanBridge.drainListeners(sc)
+    sc.addSparkListener(counter)
+    try body
+    finally { PlanBridge.drainListeners(sc); sc.removeSparkListener(counter) }
+    jobs.get()
+  }
 }
 
 object SparkSpec {

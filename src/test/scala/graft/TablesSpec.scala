@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * the driver's testdata has — a many-part directory table (production
   * shape, the 100× synthetic) must scan without a full-table round-robin
   * shuffle, and sub-MB single files (dimension tables) must stay
-  * single-partition broadcast fodder.
+  * single-partition broadcast fodder. Also pins that a load's footer
+  * schema is the one inference gives, at no Spark job.
   */
 class TablesSpec extends SparkSpec {
 
@@ -43,6 +44,26 @@ class TablesSpec extends SparkSpec {
     val df = Tables.load(spark, dir, "dim")
     assert(!hasFanout(df), "tiny table must not fan out")
     assert(df.rdd.getNumPartitions == 1)
+  }
+
+  test("load takes the inferred schema from one footer and starts no Spark job") {
+    val dir = tmpDir("tables-footer")
+    val typed = spark.range(60).select(col("id"),
+      (col("id") * lit(BigDecimal("1.25"))).cast("decimal(28,14)").as("dec"),
+      timestamp_seconds(col("id") + 1700000000L).as("ts"),
+      array(struct(col("id").as("a"), col("id").cast("string").as("b"))).as("arr"),
+      map(lit("k"), col("id")).as("m"), lit(7).as("seven"), (col("id") % 3).as("p"))
+    typed.repartition(3).write.parquet(s"$dir/multi.parquet")
+    typed.repartition(2).write.partitionBy("p").parquet(s"$dir/parted.parquet")
+    val tables = Tables.names.map(sfDir -> _) ++ Seq(dir -> "multi", dir -> "parted")
+    tables.foreach { case (d, n) =>
+      val path = s"$d/$n.parquet"
+      val inferred = spark.read.parquet(path).schema
+      if (n != "parted") assert(Tables.schemaOf(spark, path).contains(inferred), path)
+      assert(Tables.read(spark, path).schema == inferred, path)
+      assert(jobsIn(Tables.load(spark, d, n).schema) == 0, path)
+    }
+    assert(Tables.schemaOf(spark, s"$dir/missing.parquet").isEmpty)
   }
 
   test("results identical with and without the fan-out") {

@@ -167,23 +167,6 @@ class PipelineSpec extends SparkSpec {
     assert(statuses.map(_._1).toSet == Set("calc", "filter_even"))
   }
 
-  /** Spark jobs `body` starts, counted by a listener; the bus is drained
-    * on both sides so no other action's events are counted. */
-  private def jobsIn(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.graft.PlanBridge
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    PlanBridge.drainListeners(sc)
-    sc.addSparkListener(counter)
-    try body
-    finally { PlanBridge.drainListeners(sc); sc.removeSparkListener(counter) }
-    jobs.get()
-  }
-
   test("bookkeeping starts no Spark job: run-log entries and checkpoint read-back") {
     val dir = tmpDir("jobs")
     assert(jobsIn(graft.ops.RunLog.tracked(spark, s"$dir/log0", "run0", "noop")(())) == 0)
@@ -193,6 +176,13 @@ class PipelineSpec extends SparkSpec {
     assert(plain == docsChain.stages.size)
     assert(jobsIn(out.queryExecution.analyzed) == 0)
     assert(out.collect().length == 50)
+    // a replay writes each replayed stage, and its seed read takes the
+    // checkpoint footer's schema: no inference job either side
+    var replayed: org.apache.spark.sql.DataFrame = null
+    assert(jobsIn { replayed = Runner.runCheckpointed(spark, docsChain, s"$dir/plain",
+      replayFrom = Some("filter_even")) } == 1)
+    assert(jobsIn(replayed.queryExecution.analyzed) == 0)
+    assert(replayed.collect().length == 50)
     val logged = jobsIn(Runner.runCheckpointed(spark, docsChain, s"$dir/logged",
       runLogPath = Some(s"$dir/log")))
     assert(logged == plain)

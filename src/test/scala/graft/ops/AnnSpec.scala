@@ -159,6 +159,29 @@ class AnnSpec extends SparkSpec {
       direct.collect().map(_.toString).toSet)
   }
 
+  test("writeIndex clusters a producer as wide as the shuffle width to one file per cell") {
+    val corpus = emb.select(col("vec_id"), col("embedding"))
+    val model = Ann.fit(corpus, k = 4, iters = 2)
+    val width = spark.sessionState.conf.numShufflePartitions
+    val wide = model.copy(assigned = model.assigned.repartition(width))
+    assert(wide.assigned.rdd.getNumPartitions == width && width > 1)
+    val dir = tmpDir("annfiles") + "/idx"
+    Ann.writeIndex(wide, dir)
+    val fs = fsFor(dir)
+    val perCell = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/corpus"))
+      .filter(_.isDirectory).map { cd =>
+        cd.getPath.getName -> fs.listStatus(cd.getPath).count(_.getPath.getName.endsWith(".parquet"))
+      }.toMap
+    assert(perCell.size == model.nCells)
+    assert(perCell.values.forall(_ == 1), perCell)
+    // the read-back model carries the stored cell count and the schema
+    // inference would give
+    val stored = Ann.readIndex(spark, dir)
+    assert(stored.nCells == model.nCells)
+    assert(stored.assigned.schema == spark.read.parquet(s"$dir/corpus").schema)
+    assert(stored.centroids.schema == spark.read.parquet(s"$dir/centroids").schema)
+  }
+
   test("appendToIndex: incremental ingest equals a same-centroid rebuild") {
     val corpus = emb.select(col("vec_id"), col("embedding"))
     val half1 = corpus.filter(col("vec_id") < 250)
