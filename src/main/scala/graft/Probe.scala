@@ -3,6 +3,7 @@ package graft
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
@@ -33,6 +34,10 @@ import graft.plans.AsofJoinExec
   * `triggerExecution` ms cover the last timed run, build through exec.
   * `max_task_share` is that run's longest exec-phase task ÷ its exec wall
   * (as e2ebench computes it): near 1, one task held the whole exec.
+  * `codegen_compiles` is the number of classes Janino compiled over that
+  * run, build through exec (driver and tasks share the JVM's one counter):
+  * a query whose untimed run already compiled its classes reads 0 unless
+  * its generated code differs from run to run.
   *
   * A ScaleGuard refusal is recorded as a skip (the guard working), any
   * other error as a failure; the process exits nonzero if a query failed.
@@ -49,7 +54,7 @@ object Probe extends AdaptiveSparkPlanHelper {
       buildS: Double = 0, planS: Double = 0, execS: Double = 0, rows: Long = 0,
       jobs: Long = 0, stages: Long = 0, tasks: Long = 0,
       shuffleReadBytes: Long = 0, shuffleWriteBytes: Long = 0, spillBytes: Long = 0,
-      gcS: Double = 0, cpuS: Double = 0, maxTaskShare: Double = 0,
+      gcS: Double = 0, cpuS: Double = 0, maxTaskShare: Double = 0, codegenCompiles: Long = 0,
       joins: Map[String, Int] = Map.empty, batchMs: Seq[Long] = Nil, plan: String = "") {
 
     def json: String = {
@@ -67,7 +72,7 @@ object Probe extends AdaptiveSparkPlanHelper {
           "tasks" -> tasks.toString, "shuffle_read_bytes" -> shuffleReadBytes.toString,
           "shuffle_write_bytes" -> shuffleWriteBytes.toString,
           "spill_bytes" -> spillBytes.toString, "gc_s" -> num(gcS), "cpu_s" -> num(cpuS),
-          "max_task_share" -> num(maxTaskShare),
+          "max_task_share" -> num(maxTaskShare), "codegen_compiles" -> codegenCompiles.toString,
           "joins" -> joins.toSeq.sorted.map { case (k, v) => s"${str(k)}:$v" }
             .mkString("{", ",", "}"),
           "batches" -> batchMs.size.toString, "batch_ms" -> batchMs.mkString("[", ",", "]"),
@@ -151,6 +156,7 @@ object Probe extends AdaptiveSparkPlanHelper {
         shuffleReadBytes = meter.shuffleRead, shuffleWriteBytes = meter.shuffleWrite,
         spillBytes = meter.spill, gcS = meter.gcMs / 1e3, cpuS = meter.cpuNs / 1e9,
         maxTaskShare = if (lastExecS > 0) meter.maxExecTaskMs / 1e3 / lastExecS else 0,
+        codegenCompiles = meter.compiled,
         joins = joinHistogram(finalPlan), batchMs = meter.batchMs.toSeq,
         plan = finalPlan match {
           case a: AdaptiveSparkPlanExec => a.executedPlan.toString
@@ -165,6 +171,9 @@ object Probe extends AdaptiveSparkPlanHelper {
     }
   }
 
+  /** Classes Janino has compiled in this JVM so far. */
+  def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Join operators of a final physical plan, subqueries and AQE query
     * stages included, by node name. */
   private def joinHistogram(plan: SparkPlan): Map[String, Int] =
@@ -173,14 +182,14 @@ object Probe extends AdaptiveSparkPlanHelper {
       case j: AsofJoinExec => j.nodeName
     }.groupBy(identity).view.mapValues(_.size).toMap
 
-  /** Spark counters and micro-batches of one run. Listener events arrive
-    * asynchronously, so the bus is drained on attach (no earlier run's
-    * events) and on detach (all of this run's). A task launched at or after
-    * `execFromMs` belongs to the exec phase. */
+  /** Spark counters, compiles and micro-batches of one run. Listener
+    * events arrive asynchronously, so the bus is drained on attach (no
+    * earlier run's events) and on detach (all of this run's). A task
+    * launched at or after `execFromMs` belongs to the exec phase. */
   private final class Meter extends SparkListener {
     var jobs, stages, tasks, shuffleRead, shuffleWrite, spill, gcMs, cpuNs = 0L
     @volatile var execFromMs = Long.MaxValue
-    var maxExecTaskMs = 0L
+    var maxExecTaskMs, compiledBefore, compiled = 0L
     val batchMs = mutable.ArrayBuffer[Long]()
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
@@ -209,12 +218,14 @@ object Probe extends AdaptiveSparkPlanHelper {
     }
 
     def attach(spark: SparkSession): Unit = {
+      compiledBefore = compiles()
       PlanBridge.drainListeners(spark.sparkContext)
       spark.sparkContext.addSparkListener(this)
       spark.streams.addListener(streams)
     }
 
     def detach(spark: SparkSession): Unit = {
+      compiled = compiles() - compiledBefore
       PlanBridge.drainListeners(spark.sparkContext)
       spark.sparkContext.removeSparkListener(this)
       spark.streams.removeListener(streams)

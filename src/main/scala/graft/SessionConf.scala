@@ -61,6 +61,41 @@ object SessionConf {
     // uses the tungsten writer under any threshold). Set BEFORE the env
     // overlay so SPARK_GRAFT_CONF sweeps can still override it.
     builder.config("spark.shuffle.sort.bypassMergeThreshold", "16")
+    // Compiled generated code. Spark keeps one LRU cache of Janino classes
+    // per JVM, keyed by (thread context class loader, source text), and
+    // sizes it ONCE: `CodeGenerator`'s static initializer reads
+    // `spark.sql.codegen.cache.maxEntries` from `SQLConf.get` when the
+    // object is first touched, in practice at the first compile. A session
+    // built outside this overlay that compiles first leaves the JVM at
+    // Spark's 100 for good. Measured at local[4]:
+    // - one e2ebench `registry_mix` pass (nine queries, sf0.005) builds
+    //   ~230 distinct classes, so at 100 each pass recompiled nearly all of
+    //   them (222 of 230 at sf0.001; ~9 ms each);
+    // - a `graft.Probe all` sweep at sf0.1 builds 4,334, but each query's
+    //   set (at most ~100) repeats only within that query.
+    // 512 is the smallest power of two at least twice the pass. Cost: a
+    // cached class is ~2.4 KB of bytecode and ~7 KB of metaspace (Probe all
+    // peaked at 233 MB of metaspace with 100 entries, 263 MB with all
+    // 4,334 kept), so 512 entries hold ~4 MB off heap; Probe all at 512
+    // peaked at 235 MB and compiled 5,434 classes instead of 10,495.
+    builder.config("spark.sql.codegen.cache.maxEntries", "512")
+    // Two cache misses the size cannot fix, both measured as every-pass
+    // recompiles and both inert for results:
+    // - a whole-stage class is named after its codegen stage id, and
+    //   q_ann_ivf_kernel's ids change from run to run, so the same source
+    //   compiled as GeneratedIteratorForCodegenStage12 in one run and as
+    //   ...Stage15 to ...Stage20 in the next (4-20 classes a run). Without
+    //   the id the name is GeneratedIterator; the plan's `*(n)` markers
+    //   keep it.
+    // - a streaming query runs on a clone of its session, and with artifact
+    //   isolation each clone brings its own class loader to the driver and
+    //   the tasks, so q_stream_tumbling's 12 classes missed on every drain.
+    //   graft adds no artifacts (jars, files) to a session, so every
+    //   session sharing the application's loader loses nothing.
+    builder.config("spark.sql.codegen.useIdInClassName", "false")
+    builder.config("spark.sql.artifact.isolation.enabled", "false")
+    // All three are set BEFORE the env overlay so SPARK_GRAFT_CONF sweeps
+    // can still override them.
     sys.env.get("SPARK_GRAFT_CONF").foreach {
       _.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
         kv.split("=", 2) match {

@@ -13,7 +13,14 @@ class ProbeSpec extends SparkSpec {
     assert(r.plan.contains("Join"))
     assert(r.maxTaskShare > 0 && r.maxTaskShare <= 1, r.json)
     assert(r.json.contains(""""max_task_share":"""))
+    assert(r.json.contains(s""""codegen_compiles":${r.codegenCompiles},"""))
     assert(r.json.startsWith("""{"query":"q3_join","status":"ok","""))
+  }
+
+  test("the timed run of a batch query compiles no class its untimed run compiled") {
+    val r = Probe.record(spark, "q_cosine_topk", sfDir)
+    assert(r.status == "ok", r.error)
+    assert(r.codegenCompiles == 0, r.json)
   }
 
   test("q_stream_tumbling record counts its micro-batches") {

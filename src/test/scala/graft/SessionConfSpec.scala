@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.graft.CodegenCacheBridge
+
 class SessionConfSpec extends SparkSpec {
 
   test("events and streaming queries leave the session conf as they found it") {
@@ -24,6 +26,32 @@ class SessionConfSpec extends SparkSpec {
       .foreach(q => SparkEntry.queries(q)(s, sfDir).collect())
     assert(s.experimental.extraOptimizations == rules)
     assert(tables == before)
+  }
+
+  test("a second registry_mix pass reuses the classes the first pass compiled") {
+    // The nine queries of e2ebench's registry_mix workload, run as its ops
+    // run them: each collected, from a clean cache.
+    val mix = Seq("q_edit_distance", "q_dedup_clusters", "q_ann_ivf_kernel", "q_cosine_topk",
+      "q_stream_tumbling", "q_asof_join", "q_asof_native", "q_curation_pipeline", "q5_multi_join")
+    def pass(): Long = {
+      val c0 = Probe.compiles()
+      mix.foreach { q =>
+        spark.catalog.clearCache()
+        graft.queries.LearnQueries.clearMemo()
+        SparkEntry.queries(q)(spark, sfDir).collect()
+      }
+      Probe.compiles() - c0
+    }
+    // Earlier specs in this JVM may have compiled some of these classes.
+    CodegenCacheBridge.clear()
+    val first = pass()
+    // Spark sizes the cache once per JVM, at the first compile: a smaller
+    // cache than the pass means something compiled before SessionConf
+    // built the session.
+    assert(CodegenCacheBridge.size >= first,
+      s"the cache holds ${CodegenCacheBridge.size} of the $first classes the pass compiled")
+    val second = pass()
+    assert(second * 10 <= first, s"first pass compiled $first classes, the second $second")
   }
 
   test("SessionConf is the only place under src/ that builds a SparkSession") {
