@@ -64,10 +64,7 @@ object Bench {
         // Cross-query memos (the unigram lattice) are cleared per SAMPLE,
         // not per query: best-of-N otherwise publishes a memo hit as the
         // query's cost (r12 advice, medium — q_unigram_lm "0.029 s" vs its
-        // real 4.7 s). ScaleGuard's pre-flight count memo is deliberately
-        // NOT cleared: there the memo exists to keep the guard's metadata
-        // count OUT of the timed samples (min-of-N drops the first-sample
-        // count), whereas the lattice memo was hiding real work.
+        // real 4.7 s).
         graft.queries.LearnQueries.clearMemo()
         val t0 = System.nanoTime()
         fn(spark, sfDir).foreach(_ => ()) // full materialization, no collect

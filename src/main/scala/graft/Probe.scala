@@ -26,7 +26,7 @@ import graft.plans.AsofJoinExec
   * Then [[Runs]] timed runs, each from a clean cache, split Bench's one
   * number into
   *   - build: the query function call (eager driver work inside a builder:
-  *     ScaleGuard counts, memo fills, streaming drains),
+  *     ScaleGuard footer reads, memo fills, streaming drains),
   *   - plan: analysis + optimization + physical planning (`executedPlan`),
   *   - exec: full materialization (`foreach`, the action Bench times);
   * best of the runs per phase. The Spark counters (jobs, stages, tasks,

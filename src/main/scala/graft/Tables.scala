@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -86,11 +87,32 @@ object Tables {
   /** The schema `spark.read.parquet(path)` infers, read from one footer on
     * the driver. The footer is the one Spark's non-merging inference reads:
     * `_common_metadata`, else `_metadata`, else the first data file in path
-    * order, among the files Spark's file index lists (hidden `_x`/`.x`
-    * names skipped, `key=value` partition directories walked). Partition
-    * columns are not in the footer; the reader adds them from the
-    * directory names as inference does. None when no such file exists. */
+    * order, among the files Spark's file index lists ([[leafFiles]]).
+    * Partition columns are not in the footer; the reader adds them from
+    * the directory names as inference does. None when no such file
+    * exists. */
   def schemaOf(spark: SparkSession, path: String): Option[StructType] = {
+    val (files, conf) = leafFiles(spark, path)
+    summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      .map(PlanBridge.parquetFooterSchema(spark, _, conf))
+  }
+
+  /** The rows `spark.read.parquet(path).count()` counts, summed from the
+    * data files' footers on the driver: no Spark job. 0 when nothing is at
+    * `path`. */
+  def rowCount(spark: SparkSession, path: String): Long = {
+    val (files, conf) = leafFiles(spark, path)
+    files.filterNot(f => summaries.contains(f.getPath.getName))
+      .map(PlanBridge.parquetFooterRowCount(_, conf)).sum
+  }
+
+  private val summaries = Seq("_common_metadata", "_metadata")
+
+  /** The files Spark's file index lists under `path`, in path order
+    * (hidden `_x`/`.x` names skipped, `key=value` partition directories
+    * walked), with the Hadoop conf to read them. */
+  private def leafFiles(spark: SparkSession, path: String): (Seq[FileStatus], Configuration) = {
     val root = new org.apache.hadoop.fs.Path(path)
     val conf = spark.sessionState.newHadoopConf()
     val fs = root.getFileSystem(conf)
@@ -101,10 +123,7 @@ object Tables {
         .flatMap(leaves)
     val files =
       if (!fs.exists(root)) Nil else leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString)
-    val summaries = Seq("_common_metadata", "_metadata")
-    summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
-      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
-      .map(PlanBridge.parquetFooterSchema(spark, _, conf))
+    (files, conf)
   }
 
   private def fileSize(spark: SparkSession, path: String): Long = {

@@ -55,8 +55,8 @@ object DamerauLevenshtein {
 
   /** Public + statically-forwarded so generated code calls it directly. */
   def distance(a: UTF8String, b: UTF8String): Int = {
-    val x = codePoints(a)
-    val y = codePoints(b)
+    val x = JaroWinkler.codePoints(a)
+    val y = JaroWinkler.codePoints(b)
     val n = x.length; val m = y.length
     if (n == 0) return m
     if (m == 0) return n
@@ -102,26 +102,6 @@ object DamerauLevenshtein {
       i += 1
     }
     d((n + 1) * w + m + 1)
-  }
-
-  private def codePoints(s: UTF8String): Array[Int] = {
-    if (s.isFullAscii) {
-      val bytes = s.getBytes
-      val out = new Array[Int](bytes.length)
-      var i = 0
-      while (i < bytes.length) { out(i) = bytes(i); i += 1 }
-      out
-    } else {
-      val str = s.toString
-      val out = new Array[Int](str.codePointCount(0, str.length))
-      var ci = 0; var oi = 0
-      while (ci < str.length) {
-        val cp = str.codePointAt(ci)
-        out(oi) = cp; oi += 1
-        ci += Character.charCount(cp)
-      }
-      out
-    }
   }
 
   /** Alphabet last-occurrence table: flat array for ASCII, map otherwise. */

@@ -98,7 +98,9 @@ object JaroWinkler {
     jaro + prefix * 0.1 * (1.0 - jaro)
   }
 
-  private def codePoints(s: UTF8String): Array[Int] = {
+  /** `s` as code points (one per byte on the all-ASCII path); the string
+    * kernels' unit of "character", shared with [[DamerauLevenshtein]]. */
+  private[functions] def codePoints(s: UTF8String): Array[Int] = {
     if (s.isFullAscii) {
       val bytes = s.getBytes
       val out = new Array[Int](bytes.length)

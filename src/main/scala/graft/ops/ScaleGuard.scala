@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.SparkSession
 
 /** Thrown by [[ScaleGuard.check]] when a demonstration-scale configuration
   * is pointed at a corpus beyond its threshold. A DEDICATED type (rather
@@ -26,14 +26,11 @@ final class ScaleGuardRefusal(message: String) extends IllegalStateException(mes
   *
   * Before this guard the walls lived in scaladoc only: a user pointing the
   * demo config at a real corpus got an OOM ~10 minutes in, not an error.
-  * The guard runs ONE `count()` on the input table (parquet answers it
-  * from row-group metadata — no data scan) and throws a
-  * [[ScaleGuardRefusal]] naming the sizing rule and the scale-correct
-  * twin when the corpus exceeds the demonstration threshold. The count is
-  * memoized per (session, memoKey) when the call site supplies a stable
-  * key (the sf dir): Bench's best-of-N re-invokes each guarded query 2-3
-  * times per sweep, and without the memo the guard's pre-flight count was
-  * silently included in every timed sample.
+  * The guard sums the row counts in the input table's parquet footers on
+  * the driver ([[graft.Tables.rowCount]]: no Spark job, no data scan, so
+  * nothing is worth memoizing) and throws a [[ScaleGuardRefusal]] naming
+  * the sizing rule and the scale-correct twin when the corpus exceeds the
+  * demonstration threshold.
   *
   * Knobs (session conf; malformed values fail naming the key, they do not
   * surface as a bare NumberFormatException from the guts of the guard):
@@ -54,32 +51,18 @@ object ScaleGuard {
   /** Default demonstration-scale threshold (rows of the guarded input). */
   val DefaultMaxRows = 50000L
 
-  private val countMemo =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), java.lang.Long]()
-
-  /** Drop memoized pre-flight counts (sweep harnesses call this alongside
-    * clearCache so a regenerated input re-counts).
-    */
-  def clearMemo(): Unit = countMemo.clear()
-
-  /** Memoized-count entries currently held (test introspection). */
-  def memoSize: Int = countMemo.size
-
-  /** Throw unless `input` is demonstration-sized or the session opted out.
+  /** Throw unless the parquet table at `path` is demonstration-sized or
+    * the session opted out.
     *
-    * @param input     the table whose row count drives the quadratic term
+    * @param path      the table whose row count drives the quadratic term
     * @param queryName the demo-scale registry query being guarded
     * @param rule      one-line sizing rule (why fixed parameters go
     *                  quadratic), quoted in the error
     * @param twin      the scale-correct registry twin to run instead
-    * @param memoKey   stable identity of `input` within the session (the
-    *                  sf dir at the call sites) — when non-empty the
-    *                  pre-flight count is computed once per (session, key,
-    *                  query); empty disables memoization
     */
-  def check(input: DataFrame, queryName: String, rule: String, twin: String,
-            memoKey: String = ""): Unit = {
-    val conf = input.sparkSession.conf
+  def check(spark: SparkSession, path: String, queryName: String, rule: String,
+            twin: String): Unit = {
+    val conf = spark.conf
     val allow = conf.getOption(AllowKey).map { v =>
       v.toBooleanOption.getOrElse(throw new IllegalArgumentException(
         s"$AllowKey must be true or false, got '$v'"))
@@ -89,10 +72,7 @@ object ScaleGuard {
       v.toLongOption.getOrElse(throw new IllegalArgumentException(
         s"$MaxRowsKey must be an integer row count, got '$v'"))
     }.getOrElse(DefaultMaxRows)
-    val n: Long =
-      if (memoKey.isEmpty) input.count()
-      else countMemo.computeIfAbsent(
-        (input.sparkSession, s"$queryName@$memoKey"), _ => input.count()).longValue()
+    val n = graft.Tables.rowCount(spark, path)
     if (n > maxRows) throw new ScaleGuardRefusal(
       s"$queryName is a DEMONSTRATION-SCALE configuration: input has $n rows " +
         s"(> $maxRows). $rule. Run the scale-correct twin $twin instead, or " +

@@ -57,7 +57,9 @@ object Scratch {
     java.nio.file.Files.createTempDirectory(pidRoot, prefix)
   }
 
-  private def rm(root: java.nio.file.Path): Unit =
+  /** Delete `root` and everything under it, best-effort (a path already
+    * gone or not deletable is left as it is). */
+  private[graft] def rm(root: java.nio.file.Path): Unit =
     try {
       val st = java.nio.file.Files.walk(root)
       try st.sorted(java.util.Comparator.reverseOrder())

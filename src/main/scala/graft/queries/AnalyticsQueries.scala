@@ -74,38 +74,10 @@ object AnalyticsQueries {
     graft.functions.GraftFunctions.register(s)
     val p = Tables.part(s, dir)
       .select(col("p_partkey"), col("p_name"), col("p_brand"))
-      .withColumn("len", length(col("p_name")))
-    // Block on (brand × name-length band), a pure equi-join key, instead
-    // of broadcasting the whole table (r5 verdict: a build side that grows
-    // with the corpus is a scale-killer at 100×). Edit distance ≤ 4
-    // implies |len(a)-len(b)| ≤ 4, so band = len DIV 8 with the probe side
-    // exploding to the (≤2) bands covering [len-4, len+4] loses no
-    // qualifying pair; each pair meets in exactly ONE block (the build
-    // row's single band). The fine key shuffles/partitions across
-    // #brands × #bands instead of capping at #brands, and AQE is free to
-    // pick broadcast when the build side is genuinely small (it is at
-    // bench sf; at 100 TB this runs as a well-partitioned shuffle join).
     // Per-pair distance uses the codegen'd edit_distance_within
     // (byte-banded DP, early exit, -1 when > 4) — identical results to
     // levenshtein(a, b, 4), ~10× cheaper on the ASCII hot path.
-    // r9 band-width profiling (measured in DuckDB at sf0.1): p_name is
-    // 7-12 chars, so the |dlen| <= 4 gate keeps 7.97M of the 8.00M
-    // same-brand pairs — bandW 8→4 would drop only 15k pre-filter pairs
-    // (0.2%) while exploding the probe 1.5×. PAIR VOLUME, not planning,
-    // is this query's floor (~8M banded-DP kernels ≈ 6.8 s idle at
-    // local[32]); the real lever at production scale is a finer BLOCK
-    // key (brand × p_size), not a narrower length band.
-    val bandW = 8
-    val build = p.withColumn("band", (col("len") / bandW).cast("int"))
-    val probe = p.withColumn("band",
-      explode(sequence(
-        (greatest(col("len") - 4, lit(0)) / bandW).cast("int"),
-        ((col("len") + 4) / bandW).cast("int"))))
-    probe.as("a").join(build.as("b"),
-        col("a.p_brand") === col("b.p_brand") &&
-          col("a.band") === col("b.band") &&
-          col("a.p_partkey") < col("b.p_partkey") &&
-          abs(col("a.len") - col("b.len")) <= 4)
+    blockedNamePairs(p, maxGap = 4)
       .select(col("a.p_brand").as("brand"),
         expr("edit_distance_within(a.p_name, b.p_name, 4)").as("dist"))
       .filter(col("dist") > 0)
@@ -113,6 +85,46 @@ object AnalyticsQueries {
       .agg(count(lit(1)).as("n_pairs"),
         min(col("dist")).cast("bigint").as("min_dist"),
         sum(col("dist")).cast("bigint").as("sum_dist"))
+  }
+
+  /** The blocked self-join every part-name string metric runs on: `parts`
+    * (p_partkey, p_name, p_brand), already filtered or sampled by the
+    * caller, joined to itself as `a` (probe) and `b` (build) with the
+    * name length as `len`. Every unordered pair (a.p_partkey <
+    * b.p_partkey) of one brand whose name lengths differ by at most
+    * `maxGap` is kept, each once.
+    *
+    * Block on (brand × name-length band), a pure equi-join key, instead
+    * of broadcasting the whole table (r5 verdict: a build side that grows
+    * with the corpus is a scale-killer at 100×). A distance ≤ maxGap
+    * implies |len(a)-len(b)| ≤ maxGap, so band = len DIV 8 with the probe
+    * side exploding to the bands covering [len-maxGap, len+maxGap] loses
+    * no qualifying pair; each pair meets in exactly ONE block (the build
+    * row's single band). The fine key shuffles/partitions across
+    * #brands × #bands instead of capping at #brands, and AQE is free to
+    * pick broadcast when the build side is genuinely small (it is at
+    * bench sf; at 100 TB this runs as a well-partitioned shuffle join).
+    * r9 band-width profiling (measured in DuckDB at sf0.1): p_name is
+    * 7-12 chars, so the |dlen| <= 4 gate keeps 7.97M of the 8.00M
+    * same-brand pairs — bandW 8→4 would drop only 15k pre-filter pairs
+    * (0.2%) while exploding the probe 1.5×. PAIR VOLUME, not planning,
+    * is q_edit_distance's floor (~8M banded-DP kernels ≈ 6.8 s idle at
+    * local[32]); the real lever at production scale is a finer BLOCK
+    * key (brand × p_size), not a narrower length band.
+    */
+  private[queries] def blockedNamePairs(parts: DataFrame, maxGap: Int): DataFrame = {
+    val p = parts.withColumn("len", length(col("p_name")))
+    val bandW = 8
+    val build = p.withColumn("band", (col("len") / bandW).cast("int"))
+    val probe = p.withColumn("band",
+      explode(sequence(
+        (greatest(col("len") - maxGap, lit(0)) / bandW).cast("int"),
+        ((col("len") + maxGap) / bandW).cast("int"))))
+    probe.as("a").join(build.as("b"),
+      col("a.p_brand") === col("b.p_brand") &&
+        col("a.band") === col("b.band") &&
+        col("a.p_partkey") < col("b.p_partkey") &&
+        abs(col("a.len") - col("b.len")) <= maxGap)
   }
 
   val qEditDistanceSql: String =
@@ -144,22 +156,9 @@ object AnalyticsQueries {
     val p = Tables.part(s, dir)
       .filter(pmod(col("p_partkey"), lit(10)) === 0)
       .select(col("p_partkey"), col("p_name"), col("p_brand"))
-      .withColumn("len", length(col("p_name")))
-    // Same (brand × length-band) equi-blocking as q_edit_distance (no
-    // whole-table broadcast): dl ≤ 6 implies |len(a)-len(b)| ≤ 6, band
-    // width 8 with probe side exploded over [len-6, len+6] keeps every
-    // qualifying pair, each met in exactly one block (build's own band).
-    val bandW = 8
-    val build = p.withColumn("band", (col("len") / bandW).cast("int"))
-    val probe = p.withColumn("band",
-      explode(sequence(
-        (greatest(col("len") - 6, lit(0)) / bandW).cast("int"),
-        ((col("len") + 6) / bandW).cast("int"))))
-    probe.as("a").join(build.as("b"),
-        col("a.p_brand") === col("b.p_brand") &&
-          col("a.band") === col("b.band") &&
-          col("a.p_partkey") < col("b.p_partkey") &&
-          abs(col("a.len") - col("b.len")) <= 6)
+    // dl ≤ 6 implies |len(a)-len(b)| ≤ 6: the blocking keeps every
+    // qualifying pair at a gap of 6
+    blockedNamePairs(p, maxGap = 6)
       .select(col("a.p_brand").as("brand"),
         expr("damerau_levenshtein(a.p_name, b.p_name)").as("dl"),
         expr("levenshtein(a.p_name, b.p_name)").as("lev"))
@@ -1731,21 +1730,7 @@ object AnalyticsQueries {
     val p = Tables.part(s, dir)
       .filter(pmod(col("p_partkey"), lit(10)) === 0)
       .select(col("p_partkey"), col("p_name"), col("p_brand"))
-      .withColumn("len", length(col("p_name")))
-    // Band = len DIV 8; probe side explodes to the (<=2) bands covering
-    // [len-4, len+4] so each qualifying pair meets in exactly ONE block
-    // (the build row's single band). Same math as q_edit_distance.
-    val bandW = 8
-    val build = p.withColumn("band", (col("len") / bandW).cast("int"))
-    val probe = p.withColumn("band",
-      explode(sequence(
-        (greatest(col("len") - 4, lit(0)) / bandW).cast("int"),
-        ((col("len") + 4) / bandW).cast("int"))))
-    probe.as("a").join(build.as("b"),
-        col("a.p_brand") === col("b.p_brand") &&
-          col("a.band") === col("b.band") &&
-          col("a.p_partkey") < col("b.p_partkey") &&
-          abs(col("a.len") - col("b.len")) <= 4)
+    blockedNamePairs(p, maxGap = 4)
       .select(col("a.p_brand").as("brand"),
         round(expr("jaro_winkler(a.p_name, b.p_name)"), 6)
           .cast(DecimalType(10, 6)).as("jw"))
@@ -1800,21 +1785,10 @@ object AnalyticsQueries {
     val p = Tables.part(s, dir)
       .filter(pmod(col("p_partkey"), lit(10)) === 0)
       .select(col("p_partkey"), col("p_name"), col("p_brand"))
-      .withColumn("len", length(col("p_name")))
-    val bandW = 8
-    val build = p.withColumn("band", (col("len") / bandW).cast("int"))
-    val probe = p.withColumn("band",
-      explode(sequence(
-        (greatest(col("len") - 4, lit(0)) / bandW).cast("int"),
-        ((col("len") + 4) / bandW).cast("int"))))
     // the scored pair frame is read by ConnectedComponents and by the edge
     // census: truncated once, so the blocked join and three string kernels
     // run once
-    val pairs = graft.ops.Lineage.truncate(probe.as("a").join(build.as("b"),
-        col("a.p_brand") === col("b.p_brand") &&
-          col("a.band") === col("b.band") &&
-          col("a.p_partkey") < col("b.p_partkey") &&
-          abs(col("a.len") - col("b.len")) <= 4)
+    val pairs = graft.ops.Lineage.truncate(blockedNamePairs(p, maxGap = 4)
       .select(col("a.p_brand").as("brand"),
         col("a.p_partkey").as("ka"), col("b.p_partkey").as("kb"),
         expr("levenshtein(a.p_name, b.p_name)").as("lev"),

@@ -142,21 +142,7 @@ object EvalQueries {
     * class never predicted gets NULL precision (0/0), not a fake 0.
     */
   def qClassifierMetrics(s: SparkSession, dir: String): DataFrame = {
-    val en = "'the','and','of','is'"
-    val de = "'der','die','und','ist'"
-    val fr = "'le','la','et','est'"
-    val es = "'el','la','y','es'"
-    val p = Tables.documents(s, dir)
-      .select(col("lang"),
-        expr(s"size(filter(split(text,' '), x -> x IN ($en)))").as("s_en"),
-        expr(s"size(filter(split(text,' '), x -> x IN ($de)))").as("s_de"),
-        expr(s"size(filter(split(text,' '), x -> x IN ($fr)))").as("s_fr"),
-        expr(s"size(filter(split(text,' '), x -> x IN ($es)))").as("s_es"))
-      .withColumn("predicted",
-        when(col("s_en") >= greatest(col("s_de"), col("s_fr"), col("s_es")), "en")
-          .when(col("s_de") >= greatest(col("s_fr"), col("s_es")), "de")
-          .when(col("s_fr") >= col("s_es"), "fr")
-          .otherwise("es"))
+    val p = TextQueries.langVote(Tables.documents(s, dir), col("lang"))
     val conf = p.groupBy(col("lang"), col("predicted")).agg(count(lit(1)).as("n"))
     val a = conf.groupBy(col("lang").as("cls")).agg(
       sum(when(col("predicted") === col("lang"), col("n")).otherwise(0L)).as("tp"),
@@ -497,21 +483,7 @@ object EvalQueries {
     * one corpus aggregate is arithmetic over a handful of rows.
     */
   def qCohensKappa(s: SparkSession, dir: String): DataFrame = {
-    val en = "'the','and','of','is'"
-    val de = "'der','die','und','ist'"
-    val fr = "'le','la','et','est'"
-    val es = "'el','la','y','es'"
-    val conf = Tables.documents(s, dir)
-      .select(col("lang"),
-        expr(s"size(filter(split(text,' '), x -> x IN ($en)))").as("s_en"),
-        expr(s"size(filter(split(text,' '), x -> x IN ($de)))").as("s_de"),
-        expr(s"size(filter(split(text,' '), x -> x IN ($fr)))").as("s_fr"),
-        expr(s"size(filter(split(text,' '), x -> x IN ($es)))").as("s_es"))
-      .withColumn("predicted",
-        when(col("s_en") >= greatest(col("s_de"), col("s_fr"), col("s_es")), "en")
-          .when(col("s_de") >= greatest(col("s_fr"), col("s_es")), "de")
-          .when(col("s_fr") >= col("s_es"), "fr")
-          .otherwise("es"))
+    val conf = TextQueries.langVote(Tables.documents(s, dir), col("lang"))
       .groupBy(col("lang"), col("predicted")).agg(count(lit(1)).as("n"))
     val tot = conf.agg(sum(col("n")).cast("bigint").as("n_total"),
       sum(when(col("lang") === col("predicted"), col("n")).otherwise(0L))
@@ -913,14 +885,7 @@ object EvalQueries {
   def qPsi(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir).filter(col("event_type") === "purchase")
       .select(col("value"), (col("user_id") % 2 === 0).as("is_ref"))
-    val ref = ev.filter(col("is_ref")).groupBy(col("value")).agg(count(lit(1)).as("c"))
-    val cum = PrefixSum.cumsum(ref, col("c"), Seq(col("value")), "cum")
-    val ks = ref.agg(sum(col("c")).cast("bigint").as("nr"))
-      .select(col("nr"), explode(sequence(lit(1), lit(9))).as("k"))
-      .withColumn("thr", expr("CAST((k * nr + 9) div 10 AS BIGINT)"))
-    val bounds = cum.join(broadcast(ks), col("cum") >= col("thr"))
-      .groupBy(col("k")).agg(min(col("value")).as("b"))
-      .agg(sort_array(collect_list(col("b"))).as("barr"))
+    val bounds = refDeciles(ev)
     val binned = ev.crossJoin(broadcast(bounds))
       .withColumn("bin", expr("size(filter(barr, b -> b < value))"))
     val cnt = binned.groupBy(col("bin")).agg(
@@ -937,24 +902,50 @@ object EvalQueries {
     val grid = graft.ops.Lineage.truncate(
       bounds.select(col("barr"), explode(sequence(lit(0), lit(9))).as("bin"))
         .join(cnt, Seq("bin"), "left").na.fill(0L, Seq("ref_n", "cur_n")))
-    val tot = grid.agg(
-      sum(col("ref_n")).cast("bigint").as("np"),
-      sum(col("cur_n")).cast("bigint").as("nq"))
-    val terms = grid.crossJoin(broadcast(tot))
-      .withColumn("term_raw", expr(
-        """(CAST(2 * ref_n + 1 AS DOUBLE) / CAST(2 * np + 10 AS DOUBLE)
-          | - CAST(2 * cur_n + 1 AS DOUBLE) / CAST(2 * nq + 10 AS DOUBLE)) *
-          |(LN(CAST(2 * ref_n + 1 AS DOUBLE)) - LN(CAST(2 * np + 10 AS DOUBLE))
-          | - LN(CAST(2 * cur_n + 1 AS DOUBLE)) + LN(CAST(2 * nq + 10 AS DOUBLE)))""".stripMargin))
-    val stat = terms.agg(
-      sum(expr("CAST(term_raw AS DECIMAL(28,14))")).cast("double").as("psi_raw"))
-    terms.crossJoin(broadcast(stat))
+    psiTerms(grid)
       .select(col("bin"),
         expr("CASE WHEN bin = 0 THEN NULL ELSE element_at(barr, bin) END").as("lo"),
         col("ref_n"), col("cur_n"),
         r6(col("ref_n").cast("double") / col("np")).as("ref_share"),
         r6(col("cur_n").cast("double") / col("nq")).as("cur_share"),
         r6(col("term_raw")).as("term"), r6(col("psi_raw")).as("psi"))
+  }
+
+  /** The nine decile boundaries of the reference cohort of `ev` (value,
+    * is_ref), as the one-row sorted array `barr`: boundary k is the least
+    * value whose cumulative reference count reaches ⌈k·N/10⌉, from a
+    * [[graft.ops.PrefixSum]] pass over the distinct values.
+    */
+  private[queries] def refDeciles(ev: DataFrame): DataFrame = {
+    val ref = ev.filter(col("is_ref")).groupBy(col("value")).agg(count(lit(1)).as("c"))
+    val cum = PrefixSum.cumsum(ref, col("c"), Seq(col("value")), "cum")
+    val ks = ref.agg(sum(col("c")).cast("bigint").as("nr"))
+      .select(col("nr"), explode(sequence(lit(1), lit(9))).as("k"))
+      .withColumn("thr", expr("CAST((k * nr + 9) div 10 AS BIGINT)"))
+    cum.join(broadcast(ks), col("cum") >= col("thr"))
+      .groupBy(col("k")).agg(min(col("value")).as("b"))
+      .agg(sort_array(collect_list(col("b"))).as("barr"))
+  }
+
+  /** `grid` (one row per bin, with the cohort counts ref_n and cur_n) with
+    * the cohort totals np and nq, each bin's Laplace-smoothed PSI term
+    * `term_raw`, and the statistic `psi_raw`: the sum of the terms, each
+    * cast to DECIMAL(28,14) so the sum is order-independent. With p =
+    * (2·ref_n+1)/(2·np+10) and q = (2·cur_n+1)/(2·nq+10), a term is
+    * (p − q)·(ln p − ln q), every log taken of an exact BIGINT.
+    */
+  private[queries] def psiTerms(grid: DataFrame): DataFrame = {
+    val tot = grid.agg(
+      sum(col("ref_n")).cast("bigint").as("np"),
+      sum(col("cur_n")).cast("bigint").as("nq"))
+    val (p, np) = ("CAST(2 * ref_n + 1 AS DOUBLE)", "CAST(2 * np + 10 AS DOUBLE)")
+    val (q, nq) = ("CAST(2 * cur_n + 1 AS DOUBLE)", "CAST(2 * nq + 10 AS DOUBLE)")
+    val terms = grid.crossJoin(broadcast(tot))
+      .withColumn("term_raw",
+        expr(s"($p / $np - $q / $nq) * (LN($p) - LN($np) - LN($q) + LN($nq))"))
+    val stat = terms.agg(
+      sum(expr("CAST(term_raw AS DECIMAL(28,14))")).cast("double").as("psi_raw"))
+    terms.crossJoin(broadcast(stat))
   }
 
   val qPsiSql: String =

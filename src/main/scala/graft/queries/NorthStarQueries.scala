@@ -233,7 +233,14 @@ object NorthStarQueries {
       k = 4, iters = 2, exactArith = true)
     val idx = graft.ops.Scratch.dir("ann_index")
     Ann.writeIndex(model, idx.toString)
-    val stored = Ann.readIndex(s, idx.toString)
+    serveStored(s, emb, idx.toString)
+  }
+
+  /** Serve the stored index under `idx` the way [[annStoredServeSql]]
+    * checks it: the 10 queries vec_id < 10 of `emb`, top 5 neighbours each
+    * from the 2 stored centroids nearest the query, exact arithmetic. */
+  private def serveStored(s: SparkSession, emb: DataFrame, idx: String): DataFrame = {
+    val stored = Ann.readIndex(s, idx)
     val queries = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     Ann.ivfTopK(s, queries, stored.assigned, k = 5, nprobe = 2,
@@ -286,53 +293,6 @@ object NorthStarQueries {
 
   val qAnnIndexSql: String = annStoredServeSql(4)
 
-  private val embStagedSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("vec_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("embedding",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType))))
-
-  /** Stage `df` (vec_id, embedding, b) as ONE parquet leaf file per
-    * distinct `b` under a fresh scratch dir, with FIXED ascending mtimes:
-    * the file stream source lists in (modTime, path) order, so with
-    * maxFilesPerTrigger=1 file b IS micro-batch b — deterministic batch
-    * membership, the StreamingQueries.stageBatches discipline applied to
-    * embedding rows. One write job for all batches (partitionBy drops `b`
-    * from the payload, leaving exactly the (vec_id, embedding) leaf schema
-    * the stream reads).
-    */
-  private def stageEmbeddingBatches(s: SparkSession, df: DataFrame): java.nio.file.Path = {
-    val stage = graft.ops.Scratch.dir("annstage_src")
-    val raw = graft.ops.Scratch.dir("annstage_raw")
-    df.repartition(1).write.partitionBy("b").mode("overwrite").parquet(raw.toString)
-    val batches = df.select("b").distinct().collect().map(_.getInt(0)).sorted
-    batches.foreach { b =>
-      val listing = java.nio.file.Files.list(raw.resolve(s"b=$b"))
-      val parts =
-        try {
-          val l = new java.util.ArrayList[java.nio.file.Path]()
-          listing.filter(p => p.toString.endsWith(".parquet")).forEach(p => { l.add(p); () })
-          l
-        } finally listing.close()
-      require(parts.size == 1,
-        s"stageEmbeddingBatches: expected exactly 1 parquet part under b=$b, found ${parts.size}")
-      val dst = stage.resolve(f"b$b.parquet")
-      java.nio.file.Files.copy(parts.get(0), dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1000000L * (b + 1)))
-    }
-    // raw is a staging byproduct; reclaim it now rather than at JVM exit
-    // (Bench re-invokes this builder per sample)
-    try {
-      val walk = java.nio.file.Files.walk(raw)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => { java.nio.file.Files.deleteIfExists(q); () })
-      finally walk.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
-    stage
-  }
-
   /** STREAMED ingest into the persisted trained index — the composition of
     * the engine's two headline subsystems, and the round-15 headline gate:
     * the reference's core premise is stream-driven dataflow (DynamoDB
@@ -359,28 +319,22 @@ object NorthStarQueries {
     val idx = graft.ops.Scratch.dir("ann_stream_idx").toString
     Ann.writeIndex(
       model.copy(assigned = model.assigned.filter(col("vec_id") % 4 === 0)), idx)
-    val stage = stageEmbeddingBatches(s,
+    // one staged file, so one micro-batch, per remaining quarter
+    val stage = StreamingQueries.stageBatches(
       corpus.filter(col("vec_id") % 4 =!= 0)
-        .withColumn("b", (col("vec_id") % 4 - 1).cast("int")))
+        .withColumn("b", (col("vec_id") % 4 - 1).cast("int")), "annstage")
     val ckpt = graft.ops.Scratch.dir("ann_stream_ckpt").toString
-    val src = s.readStream.schema(embStagedSchema)
-      .option("maxFilesPerTrigger", "1").parquet(stage.toString)
     // throwaway checkpoint for a 3-batch drain: the same
     // checksum-off / FileSystem-manager / width confs as every other
     // registry drain (StreamingQueries.withDrainConfs scaladoc) — the
     // exactly-once contract under test lives in the ingest LEDGER, not in
     // the checkpoint's checksum sidecars (AnnSpec's restart/replay pins
     // run with default confs)
-    StreamingQueries.withDrainConfs(s, 8) {
-      Ann.streamIngest(src, idx, ckpt, exactArith = true, screenDim = Some(64))
-        .awaitTermination()
-    }
-    val stored = Ann.readIndex(s, idx)
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    Ann.ivfTopK(s, queries, stored.assigned, k = 5, nprobe = 2,
-      cellCol = "cell", exactArith = true,
-      storedCentroids = Some(stored.centroids))
+    try StreamingQueries.withDrainConfs(s, 8) {
+      Ann.streamIngest(StreamingQueries.stagedStream(s, stage, corpus.schema),
+        idx, ckpt, exactArith = true, screenDim = Some(64)).awaitTermination()
+    } finally graft.ops.Scratch.rm(stage)
+    serveStored(s, emb, idx)
   }
 
   val qStreamAnnIngestSql: String = annStoredServeSql(4)
@@ -410,12 +364,7 @@ object NorthStarQueries {
     // collapse it to ONE sub-maxPartitionBytes file and serialize the
     // probed-cell scan on a single task; see compactIndex's scaladoc)
     Ann.compactIndex(s, idx, targetFileBytes = 4L << 20)
-    val stored = Ann.readIndex(s, idx)
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    Ann.ivfTopK(s, queries, stored.assigned, k = 5, nprobe = 2,
-      cellCol = "cell", exactArith = true,
-      storedCentroids = Some(stored.centroids))
+    serveStored(s, emb, idx)
   }
 
   val qAnnCompactSql: String = annStoredServeSql(4)
@@ -438,12 +387,7 @@ object NorthStarQueries {
     val idx = graft.ops.Scratch.dir("ann_replace_idx").toString
     Ann.writeIndex(Ann.fit(corpus, k = 4, iters = 2, exactArith = true), idx)
     Ann.replaceIndex(s, Ann.fit(corpus, k = 5, iters = 2, exactArith = true), idx)
-    val stored = Ann.readIndex(s, idx)
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    Ann.ivfTopK(s, queries, stored.assigned, k = 5, nprobe = 2,
-      cellCol = "cell", exactArith = true,
-      storedCentroids = Some(stored.centroids))
+    serveStored(s, emb, idx)
   }
 
   val qAnnReplaceSql: String = annStoredServeSql(5)

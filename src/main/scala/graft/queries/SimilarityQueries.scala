@@ -267,6 +267,30 @@ object SimilarityQueries {
       |  CASE WHEN rk = 1 THEN 'keep' ELSE 'drop_near_dup' END AS action
       |FROM m""".stripMargin
 
+  /** Candidate document pairs from a df-capped inverted index: `keyed`
+    * holds distinct (doc_id, `key`) rows; keys held by more than 50 docs
+    * are dropped, and every pair (doc_a < doc_b) sharing at least
+    * `minShared` of the remaining keys is returned as (doc_a, doc_b,
+    * `sharedCol`), the shared-key count. A key in >50 docs contributes
+    * ~df² pairs and no discriminative signal (shared-vocab noise) —
+    * dropping it bounds the index fan-out, the standard rare-feature
+    * blocking at corpus scale. Near-dup pairs share ~90 shingles, almost
+    * all rare, so recall holds; each oracle applies the SAME cap, so the
+    * gates stay bit-exact. An equi-join + count, never all-pairs.
+    */
+  private[queries] def sharedRareKeyPairs(keyed: DataFrame, key: String,
+                                          sharedCol: String, minShared: Int): DataFrame = {
+    val rare = keyed.groupBy(col(key)).agg(count(lit(1)).as("df"))
+      .filter(col("df") <= 50).select(col(key))
+    val blocked = keyed.join(rare, key)
+    blocked.as("a")
+      .join(blocked.as("b"),
+        col(s"a.$key") === col(s"b.$key") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .agg(count(lit(1)).as(sharedCol))
+      .filter(col(sharedCol) >= minShared)
+  }
+
   /** Character-4-gram Jaccard near-dup: candidates from the word-shingle
     * inverted index (pairs sharing ≥5 distinct word-3-shingles — an
     * equi-join + count, not all-pairs), verified with char-4-gram Jaccard
@@ -275,21 +299,7 @@ object SimilarityQueries {
     */
   def qNgramJaccard(s: SparkSession, dir: String): DataFrame = {
     val sh = graft.ops.Lineage.truncate(shingles(s, dir))
-    // Inverted-index candidate generation with a document-frequency cap:
-    // a shingle appearing in >50 docs contributes ~df² pairs and no
-    // discriminative signal (shared-vocab noise) — dropping it bounds the
-    // index fan-out, the standard rare-feature blocking at corpus scale.
-    // Near-dup pairs share ~90 shingles, almost all rare, so recall holds;
-    // the oracle applies the SAME cap, so the gate stays bit-exact.
-    val rare = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= 50).select(col("shingle"))
-    val shRare = sh.join(rare, "shingle")
-    val cand = shRare.as("sa")
-      .join(shRare.as("sb"),
-        col("sa.shingle") === col("sb.shingle") && col("sa.doc_id") < col("sb.doc_id"))
-      .groupBy(col("sa.doc_id").as("doc_a"), col("sb.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("shared_shingles"))
-      .filter(col("shared_shingles") >= 5)
+    val cand = sharedRareKeyPairs(sh, "shingle", "shared_shingles", minShared = 5)
       .select(col("doc_a"), col("doc_b"))
     val grams = graft.ops.Lineage.truncate(Tables.documents(s, dir)
       .filter(length(col("text")) >= 4)
@@ -333,15 +343,7 @@ object SimilarityQueries {
   def qContainment(s: SparkSession, dir: String): DataFrame = {
     val sh = graft.ops.Lineage.truncate(shingles(s, dir))
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val rare = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= 50).select(col("shingle"))
-    val shRare = sh.join(rare, "shingle")
-    val cand = shRare.as("sa")
-      .join(shRare.as("sb"),
-        col("sa.shingle") === col("sb.shingle") && col("sa.doc_id") < col("sb.doc_id"))
-      .groupBy(col("sa.doc_id").as("doc_a"), col("sb.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("shared_rare"))
-      .filter(col("shared_rare") >= 3)
+    val cand = sharedRareKeyPairs(sh, "shingle", "shared_rare", minShared = 3)
       .select(col("doc_a"), col("doc_b"))
     val inter = cand
       .join(sh.as("ga"), col("doc_a") === col("ga.doc_id"))
@@ -437,15 +439,7 @@ object SimilarityQueries {
       .filter(col("pos0") <= col("m") - w)
       .select(col("doc_id"), col("wmin"))
       .distinct()
-    val rare = fps.groupBy(col("wmin")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= 50).select(col("wmin"))
-    val blocked = fps.join(rare, "wmin")
-    blocked.as("a")
-      .join(blocked.as("b"),
-        col("a.wmin") === col("b.wmin") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("shared_fps"))
-      .filter(col("shared_fps") >= 3)
+    sharedRareKeyPairs(fps, "wmin", "shared_fps", minShared = 3)
   }
 
   val qWinnowSql: String =
@@ -612,12 +606,12 @@ object SimilarityQueries {
     * `spark.graft.allowDemoScale=true`).
     */
   def qEmbeddingNeardup(s: SparkSession, dir: String): DataFrame = {
-    graft.ops.ScaleGuard.check(Tables.embeddings(s, dir),
+    graft.ops.ScaleGuard.check(s, s"$dir/embeddings.parquet",
       "q_embedding_neardup",
       "Fixed 8-bit SRP bands (256 buckets) make candidate-pair volume " +
         "~N²·bands/2^b — quadratic in N; the production rule is band bits " +
         "∝ log₂N",
-      "q_embedding_neardup_scaled", memoKey = dir)
+      "q_embedding_neardup_scaled")
     embeddingNeardup(s, dir, bandBits = 8)
   }
 
@@ -1059,12 +1053,12 @@ object SimilarityQueries {
     * configuration to rehearse at 100×.
     */
   def qSemdedup(s: SparkSession, dir: String): DataFrame = {
-    graft.ops.ScaleGuard.check(Tables.embeddings(s, dir),
+    graft.ops.ScaleGuard.check(s, s"$dir/embeddings.parquet",
       "q_semdedup",
       "Fixed k = 64 centroids make within-cluster pair volume Σ|c|² ≈ " +
         "N²/k — quadratic in N; the paper's rule is k ∝ N so |c| stays " +
         "constant",
-      "q_semdedup_scaled (or q_semdedup_ivf)", memoKey = dir)
+      "q_semdedup_scaled (or q_semdedup_ivf)")
     semdedup(s, dir, col("vec_id") < 64)
   }
 

@@ -6,6 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.LongType
 
+import scala.jdk.CollectionConverters._
+
+import graft.ops.Scratch
 import Exact._
 
 /** Streaming execution gated by the BATCH oracle: the query runs as a real
@@ -213,15 +216,15 @@ object StreamingQueries {
       // tmpfs is RAM: drop the drained query's throwaway checkpoint now
       // (the memory-sink table is independent of it) so an 11-drain sweep
       // doesn't retire state deltas into memory for the process lifetime
-      try {
-        val st = java.nio.file.Files.walk(ckptDir)
-        try st.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally st.close()
-      } catch { case scala.util.control.NonFatal(_) => () }
+      Scratch.rm(ckptDir)
       unloadDeadStateStores()
     }
-    sess.table(name)
+    // The memory sink registered `name` as a temp view on the caller's
+    // session. The frame resolves it now and keeps the sink's MemoryPlan,
+    // so the view is dropped before returning.
+    val out = sess.table(name)
+    sess.catalog.dropTempView(name)
+    out
   }
 
   private def runEventStream(s: SparkSession, dir: String, name: String,
@@ -589,19 +592,10 @@ object StreamingQueries {
     * construction (bin counts are commutative).
     */
   def qStreamDrift(s: SparkSession, dir: String): DataFrame = {
-    import graft.ops.PrefixSum
     val ev = graft.Tables.events(s, dir)
       .filter(col("event_type") === "purchase")
       .select(col("value"), (col("user_id") % 2 === 0).as("is_ref"))
-    val refv = ev.filter(col("is_ref")).groupBy(col("value")).agg(count(lit(1)).as("c"))
-    val cum = PrefixSum.cumsum(refv, col("c"), Seq(col("value")), "cum")
-    val ks = refv.agg(sum(col("c")).cast("bigint").as("nr"))
-      .select(col("nr"), explode(sequence(lit(1), lit(9))).as("k"))
-      .withColumn("thr", expr("CAST((k * nr + 9) div 10 AS BIGINT)"))
-    val boundsSeq = cum.join(broadcast(ks), col("cum") >= col("thr"))
-      .groupBy(col("k")).agg(min(col("value")).as("b"))
-      .agg(sort_array(collect_list(col("b"))).as("barr"))
-      .collect().head.getSeq[Double](0)
+    val boundsSeq = EvalQueries.refDeciles(ev).collect().head.getSeq[Double](0)
     val barr = array(boundsSeq.map(lit): _*)
     def binOf(v: org.apache.spark.sql.Column) =
       size(filter(barr, b => b < v)).cast("bigint")
@@ -625,18 +619,7 @@ object StreamingQueries {
         .join(refBins, Seq("bin"), "left")
         .join(drained, Seq("bin"), "left")
         .na.fill(0L, Seq("ref_n", "cur_n")))
-    val tot = grid.agg(
-      sum(col("ref_n")).cast("bigint").as("np"),
-      sum(col("cur_n")).cast("bigint").as("nq"))
-    val terms = grid.crossJoin(broadcast(tot))
-      .withColumn("term_raw", expr(
-        """(CAST(2 * ref_n + 1 AS DOUBLE) / CAST(2 * np + 10 AS DOUBLE)
-          | - CAST(2 * cur_n + 1 AS DOUBLE) / CAST(2 * nq + 10 AS DOUBLE)) *
-          |(LN(CAST(2 * ref_n + 1 AS DOUBLE)) - LN(CAST(2 * np + 10 AS DOUBLE))
-          | - LN(CAST(2 * cur_n + 1 AS DOUBLE)) + LN(CAST(2 * nq + 10 AS DOUBLE)))""".stripMargin))
-    val stat = terms.agg(
-      sum(expr("CAST(term_raw AS DECIMAL(28,14))")).cast("double").as("psi_raw"))
-    terms.crossJoin(broadcast(stat))
+    EvalQueries.psiTerms(grid)
       .select(col("bin"),
         when(col("bin") === 0, lit(null).cast("double"))
           .otherwise(element_at(barr, col("bin").cast("int"))).as("lo"),
@@ -708,32 +691,18 @@ object StreamingQueries {
     * event-time data at any scale.
     */
   def qStreamLate(s: SparkSession, dir: String): DataFrame = {
-    // Stage one parquet file per planted micro-batch with FIXED ascending
-    // mtimes: the file source lists in (modTime, path) order and
-    // maxFilesPerTrigger=1 turns each file into one micro-batch —
-    // deterministic batch membership, which is exactly what the oracle
-    // replays. Spark's writer output lands in a separate raw dir so the
-    // source dir holds ONLY the four leaf files.
-    val stage = stageBatches(s, "late", lateRows)
+    // One staged file per planted micro-batch: deterministic batch
+    // membership, which is exactly what the oracle replays.
+    val stage = stageBatches(planted(s, lateRows), "late")
     try {
-      val src = s.readStream.schema(stagedSchema)
-        .option("maxFilesPerTrigger", "1").parquet(stage.toString)
-      val agg = src.withWatermark("ts", "1 hour")
+      val agg = stagedStream(s, stage).withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour").as("w"))
         .agg(count(lit(1)).as("n_events"), sum(col("v")).as("sum_v"))
         .select(unix_micros(col("w.start")).as("window_start_us"),
           col("n_events"), col("sum_v"))
       drainToMemory(agg, "graft_stream_late", "append")
-    } finally { rmTree(stage) }
+    } finally Scratch.rm(stage)
   }
-
-  private def rmTree(p: java.nio.file.Path): Unit =
-    try {
-      val st = java.nio.file.Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => { java.nio.file.Files.deleteIfExists(q); () })
-      finally st.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
 
   private val stagedSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("ts",
@@ -741,54 +710,64 @@ object StreamingQueries {
     org.apache.spark.sql.types.StructField("v",
       org.apache.spark.sql.types.LongType)))
 
-  /** Stage (micro-batch, minute-of-day, v) rows as one parquet leaf file
-    * per batch under a fresh temp dir, with FIXED ascending mtimes so the
-    * file source's (modTime, path) listing order IS the batch order.
-    * Batches with no rows for this side still get a (possibly empty)
-    * slot via their own file ONLY if present in `rows` — callers that
-    * need lockstep two-source batches must plant a row per batch per side.
+  /** The planted (micro-batch, minute-of-day, v) rows as a frame of
+    * (b, ts, v). Batches with no rows for this side get no staged file —
+    * callers that need lockstep two-source batches must plant a row per
+    * batch per side.
     */
-  private def stageBatches(s: SparkSession, tag: String,
-                           rows: Seq[(Int, Int, Long)]): java.nio.file.Path = {
-    val stage = java.nio.file.Files.createTempDirectory(ckptRoot(s), s"${tag}_src")
-    val raw = java.nio.file.Files.createTempDirectory(ckptRoot(s), s"${tag}_raw")
+  private def planted(s: SparkSession, rows: Seq[(Int, Int, Long)]): DataFrame =
+    s.sql(rows.map { case (b, m, v) =>
+      s"SELECT $b AS b, timestamp_micros(${lateBaseUs + m * 60000000L}L) AS ts, CAST($v AS BIGINT) AS v"
+    }.mkString(" UNION ALL "))
+
+  /** Stage `df`'s rows as one parquet leaf file per distinct value of its
+    * int column `b` (file `b<N>.parquet`) under a fresh dir in the drain
+    * checkpoint root, with FIXED ascending mtimes so the file source's
+    * (modTime, path) listing order IS the batch order: read through
+    * [[stagedStream]], file N is micro-batch N. The caller removes the dir
+    * ([[Scratch.rm]]) once its stream is done.
+    *
+    * ONE write job for all batches (a per-batch job × 4 batches × 2 sides
+    * was ~4 s of pure scheduling in the outer-join gate): a single-task
+    * partitioned write lands one part file per b=N subdir, and partitionBy
+    * drops `b` from the file payload, leaving exactly the leaf schema the
+    * stream source reads. The batch ids are the subdirs' names, so no job
+    * collects them.
+    */
+  private[queries] def stageBatches(df: DataFrame, tag: String): java.nio.file.Path = {
+    val root = ckptRoot(df.sparkSession)
+    val stage = java.nio.file.Files.createTempDirectory(root, s"${tag}_src")
+    val raw = java.nio.file.Files.createTempDirectory(root, s"${tag}_raw")
+    def names(dir: java.nio.file.Path): Seq[String] = {
+      val st = java.nio.file.Files.list(dir)
+      try st.iterator.asScala.map(_.getFileName.toString).toSeq.sorted
+      finally st.close()
+    }
     try {
-      // ONE write job for all batches (a per-batch job × 4 batches × 2
-      // sides was ~4 s of pure scheduling in the outer-join gate): a
-      // single-task partitioned write lands one part file per b=N subdir,
-      // and partitionBy drops `b` from the file payload — exactly the
-      // (ts, v) leaf schema the stream source reads.
-      val sel = rows.map { case (b, m, v) =>
-        s"SELECT $b AS b, timestamp_micros(${lateBaseUs + m * 60000000L}L) AS ts, CAST($v AS BIGINT) AS v"
-      }.mkString(" UNION ALL ")
-      s.sql(sel).repartition(1).write.partitionBy("b")
-        .mode("overwrite").parquet(raw.toString)
-      rows.map(_._1).distinct.sorted.foreach { b =>
-        val part = {
-          val st = java.nio.file.Files.list(raw.resolve(s"b=$b"))
-          val parts =
-            try {
-              val l = new java.util.ArrayList[java.nio.file.Path]()
-              st.filter(p => p.toString.endsWith(".parquet")).forEach(p => { l.add(p); () })
-              l
-            } finally st.close()
-          // The single-task repartition(1) write must land exactly one
-          // part file per b=N partition; if session config (e.g.
-          // maxRecordsPerFile) ever rolls more, copying just one would
-          // silently drop planted rows and fail the gate confusingly.
-          require(parts.size == 1,
-            s"stageBatches($tag): expected exactly 1 parquet part under b=$b, " +
-              s"found ${parts.size} — writer rolled files (check maxRecordsPerFile)")
-          parts.get(0)
-        }
+      df.repartition(1).write.partitionBy("b").mode("overwrite").parquet(raw.toString)
+      names(raw).filter(_.startsWith("b=")).map(_.stripPrefix("b=").toInt).sorted.foreach { b =>
+        val parts = names(raw.resolve(s"b=$b")).filter(_.endsWith(".parquet"))
+        // The single-task repartition(1) write must land exactly one
+        // part file per b=N partition; if session config (e.g.
+        // maxRecordsPerFile) ever rolls more, copying just one would
+        // silently drop planted rows and fail the gate confusingly.
+        require(parts.size == 1,
+          s"stageBatches($tag): expected exactly 1 parquet part under b=$b, " +
+            s"found ${parts.size} — writer rolled files (check maxRecordsPerFile)")
         val dst = stage.resolve(f"b$b.parquet")
-        java.nio.file.Files.copy(part, dst)
+        java.nio.file.Files.copy(raw.resolve(s"b=$b").resolve(parts.head), dst)
         java.nio.file.Files.setLastModifiedTime(dst,
           java.nio.file.attribute.FileTime.fromMillis(1000000L * (b + 1)))
       }
       stage
-    } finally rmTree(raw)
+    } finally Scratch.rm(raw)
   }
+
+  /** A file stream over a staged dir ([[stageBatches]]) with the leaf
+    * `schema`: one file per micro-batch, in mtime order. */
+  private[queries] def stagedStream(s: SparkSession, dir: java.nio.file.Path,
+      schema: org.apache.spark.sql.types.StructType = stagedSchema): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir.toString)
 
   /** DuckDB replay of the two-watermark algebra over the SAME planted
     * rows (batch membership explicit) — generic in the data, not a
@@ -878,13 +857,11 @@ object StreamingQueries {
     * a left outer join.
     */
   def qStreamOuter(s: SparkSession, dir: String): DataFrame = {
-    val stageL = stageBatches(s, "outerl", outerL)
-    val stageR = stageBatches(s, "outerr", outerR)
+    val stageL = stageBatches(planted(s, outerL), "outerl")
+    val stageR = stageBatches(planted(s, outerR), "outerr")
     try {
       def src(stage: java.nio.file.Path, p: String) =
-        s.readStream.schema(stagedSchema)
-          .option("maxFilesPerTrigger", "1").parquet(stage.toString)
-          .toDF(s"${p}_ts", s"${p}_id")
+        stagedStream(s, stage).toDF(s"${p}_ts", s"${p}_id")
       val l = src(stageL, "l").withWatermark("l_ts", "1 hour")
       val r = src(stageR, "r").withWatermark("r_ts", "1 hour")
       val j = l.join(r,
@@ -896,7 +873,7 @@ object StreamingQueries {
       // state stores per partition per micro-batch, and this gate's data
       // is 16 rows across 5 batches — pure fixed cost (see drainWidth)
       drainToMemory(j, "graft_stream_outer", "append", width = 1)
-    } finally { rmTree(stageL); rmTree(stageR) }
+    } finally { Scratch.rm(stageL); Scratch.rm(stageR) }
   }
 
   /** DuckDB replay of the probed outer-join algebra over the SAME planted
@@ -995,11 +972,9 @@ object StreamingQueries {
   def qStreamTimeout(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import s.implicits._
-    val stage = stageBatches(s, "timeout", timeoutRows)
+    val stage = stageBatches(planted(s, timeoutRows), "timeout")
     try {
-      val src = s.readStream.schema(stagedSchema)
-        .option("maxFilesPerTrigger", "1").parquet(stage.toString)
-      val closed = src.withWatermark("ts", "1 hour")
+      val closed = stagedStream(s, stage).withWatermark("ts", "1 hour")
         .select(col("v").as("id"), col("ts")).as[(Long, java.sql.Timestamp)]
         .groupByKey(_._1)
         .flatMapGroupsWithState[(Long, Long), (Long, Long, Long)](
@@ -1022,7 +997,7 @@ object StreamingQueries {
             }
         }.toDF("id", "n_events", "last_us")
       drainToMemory(closed, "graft_stream_timeout", "update", width = 2)
-    } finally rmTree(stage)
+    } finally Scratch.rm(stage)
   }
 
   /** Five chained replay stages over the planted slice: in_k = surviving
@@ -1111,17 +1086,15 @@ object StreamingQueries {
     * upsert-by-window consumers correct.
     */
   def qStreamUpdate(s: SparkSession, dir: String): DataFrame = {
-    val stage = stageBatches(s, "update", updateRows)
+    val stage = stageBatches(planted(s, updateRows), "update")
     try {
-      val src = s.readStream.schema(stagedSchema)
-        .option("maxFilesPerTrigger", "1").parquet(stage.toString)
-      val agg = src.withWatermark("ts", "1 hour")
+      val agg = stagedStream(s, stage).withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour").as("w"))
         .agg(count(lit(1)).as("n_events"), sum(col("v")).as("sum_v"))
         .select(unix_micros(col("w.start")).as("window_start_us"),
           col("n_events"), col("sum_v"))
       drainToMemory(agg, "graft_stream_update", "update")
-    } finally rmTree(stage)
+    } finally Scratch.rm(stage)
   }
 
   /** Replay: per-(window, batch) deltas over the late-filtered survivors,
@@ -1188,15 +1161,13 @@ object StreamingQueries {
     * trading global exactly-once for bounded memory.
     */
   def qStreamDedupExpiry(s: SparkSession, dir: String): DataFrame = {
-    val stage = stageBatches(s, "ddexp", dedupExpiryRows)
+    val stage = stageBatches(planted(s, dedupExpiryRows), "ddexp")
     try {
-      val src = s.readStream.schema(stagedSchema)
-        .option("maxFilesPerTrigger", "1").parquet(stage.toString)
-      val out = src.withWatermark("ts", "1 hour")
+      val out = stagedStream(s, stage).withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("v")
         .select(col("v").as("id"), unix_micros(col("ts")).as("us"))
       drainToMemory(out, "graft_stream_dedup_expiry", "append", width = 2)
-    } finally rmTree(stage)
+    } finally Scratch.rm(stage)
   }
 
   /** Four chained replay stages (the q_stream_timeout oracle shape):
@@ -1302,7 +1273,8 @@ object StreamingQueries {
   private def recoveryHarnessN(s: SparkSession, tag: String,
       sources: Seq[(String, Seq[(Int, Int, Long)])], phase1MaxBatch: Int,
       build: Seq[DataFrame] => DataFrame): (DataFrame, RecoveryEvidence) = {
-    val stagedAll = sources.map { case (sub, rows) => (stageBatches(s, s"${tag}_$sub", rows), rows) }
+    val stagedAll = sources.map { case (sub, rows) =>
+      (stageBatches(planted(s, rows), s"${tag}_$sub"), rows) }
     val srcs = sources.map { case (sub, _) =>
       java.nio.file.Files.createTempDirectory(ckptRoot(s), s"${tag}_${sub}_rsrc") }
     val ckptDir = java.nio.file.Files.createTempDirectory(ckptRoot(s), s"${tag}_rckpt")
@@ -1310,7 +1282,7 @@ object StreamingQueries {
     // root it on disk tmp (not the tmpfs checkpoint root); Scratch's
     // shutdown hook reaps it at JVM exit so repeated bench samples don't
     // accumulate tmp dirs unboundedly
-    val sinkDir = graft.ops.Scratch.dir(s"${tag}_rsink")
+    val sinkDir = Scratch.dir(s"${tag}_rsink")
     def moveIn(i: Int, b: Int): Unit = {
       val f = stagedAll(i)._1.resolve(f"b$b.parquet")
       val dst = srcs(i).resolve(f"b$b.parquet")
@@ -1320,8 +1292,7 @@ object StreamingQueries {
       ()
     }
     def runOnce(): (String, Seq[Long]) = {
-      val out = build(srcs.map(src => s.readStream.schema(stagedSchema)
-        .option("maxFilesPerTrigger", "1").parquet(src.toString)))
+      val out = build(srcs.map(stagedStream(s, _)))
       analyzedPlans(s"graft_$tag") = out.queryExecution.analyzed
       // throwaway tmpfs checkpoint: the same width/checksum/manager confs
       // as drainToMemory — restart-state semantics, the thing under test,
@@ -1366,7 +1337,7 @@ object StreamingQueries {
       (s.read.parquet(sinkDir.toString),
         RecoveryEvidence(Seq(run1, run2), b1, b2))
     } finally {
-      stagedAll.foreach(p => rmTree(p._1)); srcs.foreach(rmTree); rmTree(ckptDir)
+      (stagedAll.map(_._1) ++ srcs :+ ckptDir).foreach(Scratch.rm)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -159,23 +159,28 @@ object TextQueries {
     * operator shape (per-row filter counts + CASE argmax), not NLP accuracy.
     */
   def qLangId(s: SparkSession, dir: String): DataFrame = {
-    val en = "'the','and','of','is'"
-    val de = "'der','die','und','ist'"
-    val fr = "'le','la','et','est'"
-    val es = "'el','la','y','es'"
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("lang"),
-        expr(s"size(filter(split(text,' '), x -> x IN ($en)))").as("s_en"),
-        expr(s"size(filter(split(text,' '), x -> x IN ($de)))").as("s_de"),
-        expr(s"size(filter(split(text,' '), x -> x IN ($fr)))").as("s_fr"),
-        expr(s"size(filter(split(text,' '), x -> x IN ($es)))").as("s_es"))
+    langVote(Tables.documents(s, dir), col("doc_id"), col("lang"))
+      .groupBy(col("lang"), col("predicted"))
+      .agg(count(lit(1)).as("n_docs"))
+  }
+
+  /** `docs`' `keep` columns plus the four marker-token scores (s_en, s_de,
+    * s_fr, s_es) and the `predicted` language: the argmax of the scores,
+    * ties broken in the fixed order en, de, fr, es. The q_lang_id vote,
+    * which q_classifier_metrics and q_cohens_kappa score against the
+    * labeled lang column.
+    */
+  private[queries] def langVote(docs: DataFrame, keep: Column*): DataFrame = {
+    val markers = Seq("en" -> "'the','and','of','is'", "de" -> "'der','die','und','ist'",
+      "fr" -> "'le','la','et','est'", "es" -> "'el','la','y','es'")
+    docs.select(keep ++ markers.map { case (l, m) =>
+      expr(s"size(filter(split(text,' '), x -> x IN ($m)))").as(s"s_$l")
+    }: _*)
       .withColumn("predicted",
         when(col("s_en") >= greatest(col("s_de"), col("s_fr"), col("s_es")), "en")
           .when(col("s_de") >= greatest(col("s_fr"), col("s_es")), "de")
           .when(col("s_fr") >= col("s_es"), "fr")
           .otherwise("es"))
-      .groupBy(col("lang"), col("predicted"))
-      .agg(count(lit(1)).as("n_docs"))
   }
 
   val qLangIdSql: String =

@@ -18,7 +18,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * unloading the state-store provider registry between throwaway
   * streaming drains, draining the listener bus for `graft.Probe`, and
   * reading a parquet file's Spark schema the way Spark's own inference
-  * does (for `graft.Tables.read`).
+  * does and its row count (for `graft.Tables`).
   * Nothing else in the library uses package-private Spark API.
   */
 object PlanBridge {
@@ -50,6 +50,12 @@ object PlanBridge {
     ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf)).asNullable
   }
+
+  /** Rows in parquet `file`: the sum of its row groups' counts, read from
+    * the footer on the driver. */
+  def parquetFooterRowCount(file: FileStatus, conf: Configuration): Long =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+      ParquetMetadataConverter.NO_FILTER).getBlocks.stream().mapToLong(_.getRowCount).sum()
 
   /** True when Spark's file index skips a path of this name (`_x`, `.x`,
     * `x._COPYING_`; the `_metadata`/`_common_metadata` summaries are kept). */

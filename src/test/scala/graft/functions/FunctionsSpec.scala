@@ -219,13 +219,20 @@ class FunctionsSpec extends SparkSpec {
         |  jaro_winkler('abc', ''),
         |  jaro_winkler('', ''),
         |  jaro_winkler('same', 'same'),
-        |  jaro_winkler('abcd', 'dcba')""".stripMargin).collect().head
+        |  jaro_winkler('abcd', 'dcba'),
+        |  jaro_winkler('żółw', 'żółć'),
+        |  jaro_winkler('😀a', '😀b')""".stripMargin).collect().head
     // canonical textbook values (also DuckDB's): MARTHA/MARHTA boosted
     // 0.9611..., DWAYNE/DUANE boosted 0.84
     assert(math.abs(r.getDouble(0) - 0.9611111111111111) < 1e-12)
     assert(math.abs(r.getDouble(1) - 0.84) < 1e-12)
     assert(r.getDouble(2) == 0.0 && r.getDouble(3) == 1.0 && r.getDouble(4) == 1.0)
     assert(r.getDouble(5) >= 0.0 && r.getDouble(5) <= 1.0)
+    // non-ASCII is scored per code point: 3 of 4 match with a 3-point
+    // common prefix (jaro 5/6, boosted by 0.3·(1/6)); a surrogate pair is
+    // one point, so 1 of 2 match and 2/3 gets no boost
+    assert(math.abs(r.getDouble(6) - 0.8833333333333333) < 1e-12, s"got $r")
+    assert(math.abs(r.getDouble(7) - 2.0 / 3) < 1e-12, s"got $r")
     assert(spark.sql("SELECT jaro_winkler(NULL, 'x')").collect().head.isNullAt(0))
     // random pairs: symmetric, in [0,1], 1 iff equal (non-empty alphabet)
     val rnd = new scala.util.Random(11)

@@ -17,25 +17,43 @@ class ScaleGuardSpec extends SparkSpec {
     finally kvs.foreach { case (k, _) => spark.conf.unset(k) }
   }
 
+  /** A parquet table of `n` rows in two files; its path. */
+  private def table(n: Long): String = {
+    val path = s"${tmpDir("scaleguard")}/t.parquet"
+    spark.range(0, n, 1, 2).write.parquet(path)
+    path
+  }
+  private lazy val big = table(ScaleGuard.DefaultMaxRows + 1)
+  private lazy val atMax = table(ScaleGuard.DefaultMaxRows)
+  private lazy val one = table(1)
+
   test("check throws above the threshold, naming rule and twin") {
-    val big = spark.range(ScaleGuard.DefaultMaxRows + 1).toDF("id")
     val e = intercept[IllegalStateException] {
-      ScaleGuard.check(big, "q_demo", "fixed params go quadratic", "q_demo_scaled")
+      ScaleGuard.check(spark, big, "q_demo", "fixed params go quadratic", "q_demo_scaled")
     }
     assert(e.getMessage.contains("q_demo_scaled"))
     assert(e.getMessage.contains("fixed params go quadratic"))
     assert(e.getMessage.contains(ScaleGuard.AllowKey))
+    assert(e.getMessage.contains(s"${ScaleGuard.DefaultMaxRows + 1} rows"))
   }
 
   test("check passes at or below the threshold") {
-    ScaleGuard.check(spark.range(ScaleGuard.DefaultMaxRows).toDF("id"),
-      "q_demo", "rule", "twin")
+    ScaleGuard.check(spark, atMax, "q_demo", "rule", "twin")
+  }
+
+  test("check sums the parquet footers on the driver and starts no Spark job") {
+    assert(graft.Tables.rowCount(spark, big) == spark.read.parquet(big).count())
+    assert(atMax.nonEmpty) // written before the count starts
+    val jobs = jobsIn {
+      intercept[ScaleGuardRefusal](ScaleGuard.check(spark, big, "q_demo", "rule", "twin"))
+      ScaleGuard.check(spark, atMax, "q_demo", "rule", "twin")
+    }
+    assert(jobs == 0)
   }
 
   test("allowDemoScale=true skips the guard entirely") {
     withConf(ScaleGuard.AllowKey -> "true") {
-      ScaleGuard.check(spark.range(ScaleGuard.DefaultMaxRows + 1).toDF("id"),
-        "q_demo", "rule", "twin")
+      ScaleGuard.check(spark, big, "q_demo", "rule", "twin")
     }
   }
 
@@ -72,7 +90,7 @@ class ScaleGuardSpec extends SparkSpec {
 
   test("gate scales pass the default threshold (no conf set)") {
     // the sf0.001/sf0.01/sf0.1 gates must keep running the demo configs:
-    // plan construction alone exercises the pre-flight count
+    // plan construction alone exercises the pre-flight row count
     SimilarityQueries.qEmbeddingNeardup(spark, sfDir)
     SimilarityQueries.qSemdedup(spark, sfDir)
   }
@@ -81,39 +99,23 @@ class ScaleGuardSpec extends SparkSpec {
     // sweep harnesses classify guard skips by CLASS; an unrelated failure
     // quoting the guard's message must not be mistaken for a skip
     intercept[ScaleGuardRefusal] {
-      ScaleGuard.check(spark.range(ScaleGuard.DefaultMaxRows + 1).toDF("id"),
-        "q_demo", "rule", "twin")
+      ScaleGuard.check(spark, big, "q_demo", "rule", "twin")
     }
   }
 
   test("malformed conf values fail naming the key, not with a bare parse error") {
     withConf(ScaleGuard.AllowKey -> "1") {
       val e = intercept[IllegalArgumentException] {
-        ScaleGuard.check(spark.range(1).toDF("id"), "q_demo", "rule", "twin")
+        ScaleGuard.check(spark, one, "q_demo", "rule", "twin")
       }
       assert(e.getMessage.contains(ScaleGuard.AllowKey))
     }
     withConf(ScaleGuard.MaxRowsKey -> "lots") {
       val e = intercept[IllegalArgumentException] {
-        ScaleGuard.check(spark.range(1).toDF("id"), "q_demo", "rule", "twin")
+        ScaleGuard.check(spark, one, "q_demo", "rule", "twin")
       }
       assert(e.getMessage.contains(ScaleGuard.MaxRowsKey))
     }
-  }
-
-  test("pre-flight count is memoized per (session, query, key)") {
-    ScaleGuard.clearMemo()
-    val df = spark.range(3).toDF("id")
-    ScaleGuard.check(df, "q_memo_demo", "rule", "twin", memoKey = "k1")
-    assert(ScaleGuard.memoSize == 1, "first keyed check must populate the memo")
-    ScaleGuard.check(df, "q_memo_demo", "rule", "twin", memoKey = "k1")
-    assert(ScaleGuard.memoSize == 1, "same key must hit the memo, not re-count")
-    ScaleGuard.check(df, "q_memo_demo", "rule", "twin", memoKey = "k2")
-    assert(ScaleGuard.memoSize == 2, "a different key must count separately")
-    ScaleGuard.check(df, "q_memo_demo", "rule", "twin")
-    assert(ScaleGuard.memoSize == 2, "an empty key must not be memoized")
-    ScaleGuard.clearMemo()
-    assert(ScaleGuard.memoSize == 0)
   }
 
   test("no bare localCheckpoint in main source outside Lineage.scala") {
